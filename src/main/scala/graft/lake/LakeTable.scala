@@ -80,14 +80,14 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
     h()
   }
 
-  /** Jittered exponential backoff before a commit retry. Without it, N
-    * writers that lose a CAS all recompute in lockstep and can convoy one
-    * loser out of even 50 retries (observed in ConcurrencyStress);
-    * Iceberg's commit path backs off the same way.
+  /** Jittered exponential backoff before commit retry number `attempt`
+    * (1-based, counted across recomputes). Without it, N writers that lose
+    * a CAS all recompute in lockstep and can convoy one loser out of even
+    * 50 retries (observed in ConcurrencyStress); Iceberg's commit path
+    * backs off the same way.
     */
-  private def commitBackoff(attemptsLeft: Int, retries: Int): Unit = {
-    val n = math.max(0, retries - attemptsLeft)
-    val cap = math.min(1600L, 25L << math.min(n, 6))
+  private def commitBackoff(attempt: Int): Unit = {
+    val cap = math.min(1600L, 25L << math.min(attempt, 6))
     Thread.sleep(java.util.concurrent.ThreadLocalRandom.current.nextLong(cap / 2, cap + 1))
   }
 
@@ -343,13 +343,13 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
   }
 
   /** All data files of a snapshot (uncached manifests loaded concurrently). */
-  def filesOf(s: Snapshot): Seq[DataFile] = {
+  def filesOf(s: Snapshot): Seq[DataFile] = loadAll(s.manifests)
+
+  private def loadAll(refs: Seq[ManifestRef]): Seq[DataFile] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(
-      Future.sequence(s.manifests.map(r => Future(loadManifest(r)))),
-      Duration.Inf).flatten
+    Await.result(Future.sequence(refs.map(r => Future(loadManifest(r)))), Duration.Inf).flatten
   }
 
   /** Data files of ONE bucket — a point lookup reads a single manifest. */
@@ -823,6 +823,125 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
       .eval(InternalRow.empty).asInstanceOf[Int]
   }
 
+  // --- the commit loop -----------------------------------------------------
+
+  /** The one commit loop: every snapshot-changing operation except
+    * [[init]] and [[truncate]] commits through it (optimistic, with
+    * jittered backoff between attempts).
+    *
+    * `stage` computes the operation's output against a head — Left when
+    * there is nothing to commit, else the [[Pending]] commit.
+    * The loop builds the snapshot on the current base, fires the
+    * pre-commit hook and attempts the HEAD CAS. A lost CAS spends one of
+    * `retries`, backs off, re-reads the head (checked: a concurrent
+    * [[rebucket]] changed the key modulus our pending files were bucketed
+    * with, so fail loudly with the re-open guidance instead of rebasing
+    * them) and acts on the operation's verdict:
+    *  - '''rebase''': re-point the carried manifests at the new head and
+    *    commit the same pending files, no data recompute;
+    *  - '''recompute''': run `stage` again on the new head — one more turn
+    *    of this loop, so the backoff sees the true attempt number and
+    *    contending writers escalate instead of convoying at 25 ms;
+    *  - '''already applied''': the new head carries our batchId (another
+    *    writer of the same stream applied it — exactly-once holds).
+    * Losers' data/manifest files are unreferenced orphans (tokened paths,
+    * no collisions). Exercised under real contention by
+    * [[graft.tools.ConcurrencyStress]].
+    */
+  private def commitLoop[A](first: Snapshot, retries: Int)
+                           (stage: Snapshot => Either[A, Pending[A]]): A = {
+    var base = first
+    var pending = stage(base)
+    var lost = 0
+    while (true) {
+      val p = pending match {
+        case Left(done) => return done
+        case Right(p) => p
+      }
+      val snap = p.snapshotOn(base)
+      firePreCommitHook()
+      try {
+        commitSnapshot(snap, expectedParent = base.version)
+        return p.result(snap)
+      } catch { case e: ConcurrentCommitException =>
+        if (lost >= retries) throw e
+        lost += 1
+        commitBackoff(lost)
+        val head = checkedHead()
+        p.onLost(base, head) match {
+          case AlreadyApplied(done) => return done
+          case Rebase => base = head
+          case Recompute => base = head; pending = stage(head)
+        }
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** The snapshot after `base` that swaps the manifests of the `replaced`
+    * buckets for `refs` and carries every other manifest by reference.
+    * `totalRows` joins the summary; the fence carries unless `batchId`
+    * advances it.
+    */
+  private def nextSnapshot(base: Snapshot, replaced: Int => Boolean, refs: Seq[ManifestRef],
+                           summary: Map[String, String], batchId: Option[Long] = None,
+                           buckets: Int = -1): Snapshot = {
+    val manifests = base.manifests.filterNot(r => replaced(r.bucket)) ++ refs
+    Snapshot(base.version + 1, base.version, batchId.getOrElse(base.lastBatchId),
+      base.schemaIds, manifests,
+      summary + ("totalRows" -> manifests.map(_.rowCount).sum.toString),
+      mode = base.mode, numBuckets = buckets)
+  }
+
+  /** Verdict for a COW rewrite of the `touched` buckets derived from
+    * `base`'s rows: '''recompute''' when a winner committed DATA into one of
+    * them (our merged rows came from stale target data) or a concurrent
+    * vacuum reclaimed our pending files (a rebase would commit dangling
+    * references); otherwise '''rebase''' — every interleaved commit either
+    * left our buckets alone or was a live-state-preserving compaction.
+    */
+  private def rewriteVerdict(touched: Set[Int], newRefs: Seq[ManifestRef])
+                            (base: Snapshot, head: Snapshot): Verdict[Nothing] =
+    if (touched.exists(b => refOf(base, b) != refOf(head, b)) &&
+        !onlyCompactions(base.version, head.version) || pendingVanished(newRefs)) Recompute
+    else Rebase
+
+  /** True when every commit in (fromV, toV] is a LIVE-STATE-PRESERVING
+    * layout rewrite (compaction — never a merge, truncate, or rebucket).
+    * Then a CAS loser's computed merge output is still valid even for its
+    * touched buckets (it was derived from rows a compaction only
+    * re-laid-out), so it may REBASE instead of recomputing — Iceberg's
+    * "rewrite commits don't conflict with data commits" rule. Without
+    * this, a cadence compactor forces every concurrent writer into a full
+    * recompute per tick and can starve them outright (observed in
+    * ConcurrencyStress before the fix). Tombstones a compaction GC'd may
+    * be re-introduced by the rebased output — sound, they only ever
+    * guard against older out-of-order events. A missing (expired)
+    * intermediate snapshot falls back to recompute.
+    */
+  private def onlyCompactions(fromV: Int, toV: Int): Boolean =
+    (fromV + 1 to toV).forall { v =>
+      snapshotRetained(v) && snapshotAt(v).summary.contains("compaction")
+    }
+
+  /** True when any of this writer's PENDING (not yet committed) manifest
+    * or data files has disappeared — a concurrent vacuum with a zero/short
+    * grace window ran between our data write and the commit CAS.
+    */
+  private def pendingVanished(refs: Seq[ManifestRef]): Boolean =
+    refs.exists { r =>
+      !Files.exists(Paths.get(root, r.path)) ||
+        loadManifest(r).exists(f => !Files.exists(Paths.get(root, f.path)))
+    }
+
+  /** Rows of `h`'s data files in the buckets `buckets` selects. */
+  private def readBuckets(spark: SparkSession, h: Snapshot, buckets: Int => Boolean): DataFrame =
+    readFiles(spark, loadAll(h.manifests.filter(r => buckets(r.bucket))))
+
+  /** Row count per `_b` bucket id of a bucketed frame (one job). */
+  private def bucketCounts(bucketed: DataFrame): Map[Int, Long] =
+    bucketed.groupBy("_b").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+
   // --- MERGE ---------------------------------------------------------------
 
   /** One drained change window: the feed plus a cursor-advance callback. */
@@ -871,250 +990,140 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
           s"(${dup.head.get(0)}, ${dup.head.get(1)}) — $hint")
   }
 
-  /** Multi-writer arbitration (optimistic, with jittered backoff between
-    * attempts): a lost HEAD CAS triggers
-    *  - '''manifest rebase''' when every interleaved commit either left OUR
-    *    touched buckets alone (disjoint-key merges) or was a
-    *    live-state-preserving compaction (Iceberg's rewrite-vs-data
-    *    non-conflict rule — our computed output is still valid): re-point
-    *    the carried manifests at the new head and re-commit, no data
-    *    recompute;
-    *  - '''full recompute''' against the new head when a winner committed
-    *    DATA into a bucket we also touched (our merged rows were derived
-    *    from stale target data), or a concurrent vacuum reclaimed our
-    *    pending files;
-    *  - '''no-op''' if the new head already carries our batchId (another
-    *    writer of the same stream applied it — exactly-once holds).
-    * Losers' data/manifest files are unreferenced orphans (tokened paths,
-    * no collisions). Exercised under real contention by
-    * [[graft.tools.ConcurrencyStress]].
-    *
-    * `backoffBase` (internal): attempts already consumed by an earlier
-    * recompute incarnation of this call — commitBackoff must see the TRUE
-    * cumulative attempt number or the jittered escalation restarts at
-    * 25 ms on every recompute and contending writers convoy (the compact()
-    * pathology, fixed there with a loop; recursion here re-runs the whole
-    * derivation so the budget is threaded instead).
+  /** The fenced CDC merge, committed through [[commitLoop]]. A lost CAS:
+    *  - COW rebases when the winners left our touched buckets alone or only
+    *    compacted, else recomputes ([[rewriteVerdict]]);
+    *  - MOR appends never derive from target data, so they always rebase
+    *    (recombining the touched-bucket manifests against the new head) —
+    *    unless a vacuum reclaimed the pending files, which recomputes;
+    *  - both stop, not applied, when the new head carries our batchId.
     */
   def merge(spark: SparkSession, batch: DataFrame, batchId: Long,
             updateColumns: Option[Seq[String]], retries: Int,
             srcKeyUnique: Boolean = false,
-            acceptEqualSeq: Boolean = false,
-            backoffBase: Int = 0): MergeStats = {
+            acceptEqualSeq: Boolean = false): MergeStats = {
     val h0 = checkedHead()
-    if (batchId <= h0.lastBatchId)
-      return MergeStats(applied = false, h0.version, 0L, 0, h0.totalRows)
-    if (h0.mode == Mor) {
-      require(updateColumns.isEmpty,
-        "column-subset merge needs the target row — COW mode only")
-      // duplicate keys per append batch are sound in MOR (log semantics:
-      // read-time LWW resolves by seq) — but duplicate (key, seq) with
-      // different payloads inside ONE batch is ambiguous even for LWW
-      return mergeAppend(spark, batch, batchId, h0, retries,
-        srcKeyUnique = srcKeyUnique, backoffBase = backoffBase)
-    }
+    def notApplied(h: Snapshot) = MergeStats(applied = false, h.version, 0L, 0, h.totalRows)
+    if (batchId <= h0.lastBatchId) return notApplied(h0)
+    val mor = h0.mode == Mor
+    require(!mor || updateColumns.isEmpty,
+      "column-subset merge needs the target row — COW mode only")
     val src = batch.withColumn("_b", bucketExpr).persist()
     try {
-      // guard runs on the PERSISTED frame so its job warms the cache the
+      // guards run on the PERSISTED frame so their job warms the cache the
       // touched-bucket/rewrite jobs reuse (not a second lineage recompute)
-      if (!srcKeyUnique) requireUniqueKeys(src, col("repo"), col("path"),
-        "LWW-dedupe the batch first (e.g. Dedupe.lwwTyped) or pass srcKeyUnique=true " +
-          "if deduped by construction")
+      if (!srcKeyUnique) {
+        if (mor) requireUniqueKeySeqs(src)
+        else requireUniqueKeys(src, col("repo"), col("path"),
+          "LWW-dedupe the batch first (e.g. Dedupe.lwwTyped) or pass srcKeyUnique=true " +
+            "if deduped by construction")
+      }
       // one job yields both the touched-bucket set and the source row count
-      val bucketCounts = src.groupBy("_b").count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val touched = bucketCounts.keySet
-      val srcRows = bucketCounts.values.sum
-      // same carry-set note as mergeSql: recomputed per rebase, never captured
-      val touchedRefs = h0.manifests.filter(r => touched.contains(r.bucket))
-      val tgt = readFiles(spark, touchedRefs.flatMap(loadManifest))
-
-      val s = src.select(
-        col("repo").as("s_repo"), col("path").as("s_path"),
-        col("op").as("s_op"), col("_b").as("s_b"),
-        col("seq").as("s_seq"), col("commit").as("s_commit"),
-        col("language").as("s_language"), col("content").as("s_content"),
-        col("size_bytes").as("s_size_bytes"))
-      val j = tgt.join(s,
-        tgt("repo") === s("s_repo") && tgt("path") === s("s_path"), "full_outer")
-      // acceptEqualSeq: a REPLICATION sink must let an equal-seq source row
-      // win — the primary's own SQL MERGE may mutate payload while leaving
-      // seq unassigned, and its change feed carries that row with the seq
-      // the mirror already holds (changesBetween doc). Still idempotent:
-      // re-applying the same row overwrites with identical values. Ingest
-      // paths keep the strict `>` (an event never outranks itself).
-      val seqWins =
-        if (acceptEqualSeq) col("s_seq") >= col("seq")
-        else col("s_seq") > col("seq")
-      val takeSrc = col("s_seq").isNotNull &&
-        (col("seq").isNull || seqWins)
-      // DELETE arm writes a tombstone (nulled payload, deleted=true, src seq)
-      // rather than dropping the row — see `deleted` column doc above.
-      val srcIsDel = col("s_op") === "D"
-      val matched = col("seq").isNotNull && !coalesce(col("deleted"), lit(false))
-      def arm(c: String) = {
-        // column-subset semantics: on a matched UPDATE, non-listed columns
-        // keep the target value; inserts take the source value regardless
-        val pickSrc: Column = updateColumns match {
-          case Some(cols) if !cols.contains(c) => !matched
-          case _ => lit(true)
-        }
-        when(takeSrc, when(srcIsDel, lit(null)).otherwise(
-          when(pickSrc, col(s"s_$c")).otherwise(col(c))))
-          .otherwise(col(c)).as(c)
-      }
-      val merged = j
-        .select(
-          coalesce(col("repo"), col("s_repo")).as("repo"),
-          coalesce(col("path"), col("s_path")).as("path"),
-          arm("commit"), arm("language"), arm("content"), arm("size_bytes"),
-          when(takeSrc, col("s_seq")).otherwise(col("seq")).as("seq"),
-          when(takeSrc, srcIsDel).otherwise(coalesce(col("deleted"), lit(false)))
-            .as("deleted"))
-
-      // COW: touched buckets are fully rewritten → fresh manifest each;
-      // untouched bucket manifests carried by reference (O(touched) IO)
-      val token = newToken()
-      val newRefs = writeManifests(token, writeSnapshotFiles(merged, token))
-
-      var base = h0
-      var attempts = retries
-      while (true) {
-        firePreCommitHook()
-        try {
-          val keep = base.manifests.filterNot(r => touched.contains(r.bucket))
-          val snap = Snapshot(
-            version = base.version + 1, parent = base.version, lastBatchId = batchId,
-            schemaIds = base.schemaIds,
-            manifests = keep ++ newRefs,
-            summary = Map(
-              "batchId" -> batchId.toString,
-              "srcRows" -> srcRows.toString,
-              "touchedBuckets" -> touched.size.toString,
-              "totalRows" -> (keep.map(_.rowCount).sum + newRefs.map(_.rowCount).sum).toString),
-            mode = base.mode)
-          commitSnapshot(snap, expectedParent = base.version)
-          return MergeStats(applied = true, snap.version, srcRows, touched.size, snap.totalRows)
-        } catch { case e: ConcurrentCommitException =>
-          if (attempts <= 0) throw e
-          attempts -= 1
-          // backoffBase carries attempts consumed by earlier recompute
-          // incarnations, so escalation never restarts at 25 ms mid-convoy
-          commitBackoff(attempts, retries + backoffBase)
-          // checkedHead, not head: a concurrent REBUCKET changes the key
-          // modulus — our touched-set and pending files were bucketed with
-          // the old one, so a rebase (all-empty touched buckets compare
-          // equal across the rebucket) would commit old-modulus files AND
-          // stamp the stale modulus back into the snapshot. Fail loudly
-          // with the re-open guidance instead (same rule as mergeAppend).
-          val h1 = checkedHead()
-          if (batchId <= h1.lastBatchId) // our batch won through another writer
-            return MergeStats(applied = false, h1.version, 0L, 0, h1.totalRows)
-          val conflict = touched.exists(b => refOf(base, b) != refOf(h1, b)) &&
-            !onlyCompactions(base.version, h1.version)
-          // vanished: a concurrent vacuum(0) reclaimed our pending files
-          // between data write and CAS — rebasing would commit dangling
-          // references; recompute re-writes fresh files
-          if (conflict || pendingVanished(newRefs))
-            // already key-validated on the first attempt; acceptEqualSeq
-            // must survive the recompute or a replication sink's equal-seq
-            // payload mutation silently loses exactly when contention hits
-            return merge(spark, batch, batchId, updateColumns, attempts,
-              srcKeyUnique = true, acceptEqualSeq = acceptEqualSeq,
-              backoffBase = backoffBase + (retries - attempts))
-          base = h1 // disjoint (or compaction-only): manifest rebase
+      val counts = bucketCounts(src)
+      val touched = counts.keySet
+      val srcRows = counts.values.sum
+      val summary = Map("batchId" -> batchId.toString, "srcRows" -> srcRows.toString,
+        "touchedBuckets" -> touched.size.toString)
+      def applied(s: Snapshot) = MergeStats(applied = true, s.version, srcRows, touched.size, s.totalRows)
+      def fenced(v: (Snapshot, Snapshot) => Verdict[Nothing])(base: Snapshot, head: Snapshot) =
+        if (batchId <= head.lastBatchId) AlreadyApplied(notApplied(head)) else v(base, head)
+      commitLoop(h0, retries) { h =>
+        if (mor) {
+          // MOR append: O(batch) writes; touched buckets get a REWRITTEN
+          // manifest (old files + appended files) on each base
+          val newFiles = writeSnapshotFiles(appendRows(src), newToken())
+          Right(Pending(base => nextSnapshot(base, touched,
+              writeManifests(newToken(), newFiles ++ loadAll(base.manifests.filter(r => touched(r.bucket)))),
+              summary, Some(batchId)),
+            applied, fenced((_, _) =>
+              if (newFiles.exists(f => !Files.exists(Paths.get(root, f.path)))) Recompute
+              else Rebase)))
+        } else {
+          // COW: touched buckets are fully rewritten → fresh manifest each;
+          // untouched bucket manifests carried by reference (O(touched) IO)
+          val merged = cowMerged(readBuckets(spark, h, touched), src, updateColumns, acceptEqualSeq)
+          val token = newToken()
+          val newRefs = writeManifests(token, writeSnapshotFiles(merged, token))
+          Right(Pending(nextSnapshot(_, touched, newRefs, summary, Some(batchId)),
+            applied, fenced(rewriteVerdict(touched, newRefs))))
         }
       }
-      throw new IllegalStateException("unreachable")
     } finally src.unpersist()
   }
 
-  /** MOR apply: append the deduped batch as new bucket files — upserts as
-    * table rows, deletes as tombstones — carrying ALL existing files in the
-    * manifest. Writes are O(batch) regardless of table size; the seq guard
-    * moves to read-time LWW resolution (which also absorbs out-of-order
-    * batches). Fence semantics identical to COW.
+  /** MOR guard: same-key rows with DIFFERENT seqs are the MOR log shape
+    * (read-time LWW resolves); equal (key, seq) with different payloads in
+    * one batch would land in ONE data file where no tie-break is defined —
+    * the ambiguity resolve()'s cross-file file-path rule cannot reach.
     */
-  private def mergeAppend(spark: SparkSession, batch: DataFrame, batchId: Long,
-                          h0: Snapshot, retries: Int = 3,
-                          srcKeyUnique: Boolean = false,
-                          backoffBase: Int = 0): MergeStats = {
-    val src = batch.withColumn("_b", bucketExpr).persist()
-    try {
-      // Same-key rows with DIFFERENT seqs are the MOR log shape (read-time
-      // LWW resolves); equal (key, seq) with different payloads in one
-      // batch would land in ONE data file where no tie-break is defined —
-      // the ambiguity resolve()'s cross-file file-path rule cannot reach.
-      // Skipped when the caller guarantees key-uniqueness (which implies
-      // (key, seq)-uniqueness) — the streaming hot paths all do.
-      if (!srcKeyUnique) {
-        val dup = src.groupBy(col("repo"), col("path"), col("seq"))
-          .count().filter(col("count") > 1).limit(1).collect()
-        if (dup.nonEmpty)
-          throw new IllegalArgumentException(
-            s"MOR append carries ${dup.head.getLong(3)} rows with the same " +
-              s"(repo, path, seq) = (${dup.head.get(0)}, ${dup.head.get(1)}, " +
-              s"${dup.head.get(2)}) — LWW cannot order them; dedupe the batch first")
+  private def requireUniqueKeySeqs(src: DataFrame): Unit = {
+    val dup = src.groupBy(col("repo"), col("path"), col("seq"))
+      .count().filter(col("count") > 1).limit(1).collect()
+    if (dup.nonEmpty)
+      throw new IllegalArgumentException(
+        s"MOR append carries ${dup.head.getLong(3)} rows with the same " +
+          s"(repo, path, seq) = (${dup.head.get(0)}, ${dup.head.get(1)}, " +
+          s"${dup.head.get(2)}) — LWW cannot order them; dedupe the batch first")
+  }
+
+  /** A MOR batch as table rows: upserts as rows, deletes as tombstones. */
+  private def appendRows(src: DataFrame): DataFrame = {
+    val isDel = col("op") === "D"
+    src.select(
+      col("repo"), col("path"),
+      when(isDel, lit(null)).otherwise(col("commit")).as("commit"),
+      when(isDel, lit(null)).otherwise(col("language")).as("language"),
+      when(isDel, lit(null)).otherwise(col("content")).as("content"),
+      when(isDel, lit(null)).otherwise(col("size_bytes")).as("size_bytes"),
+      col("seq"), isDel.as("deleted"))
+  }
+
+  /** The COW merge of `src` into the touched buckets' target rows `tgt`:
+    * one full-outer join on the key, the seq guard, tombstone deletes.
+    */
+  private def cowMerged(tgt: DataFrame, src: DataFrame, updateColumns: Option[Seq[String]],
+                        acceptEqualSeq: Boolean): DataFrame = {
+    val s = src.select(
+      col("repo").as("s_repo"), col("path").as("s_path"),
+      col("op").as("s_op"), col("_b").as("s_b"),
+      col("seq").as("s_seq"), col("commit").as("s_commit"),
+      col("language").as("s_language"), col("content").as("s_content"),
+      col("size_bytes").as("s_size_bytes"))
+    val j = tgt.join(s,
+      tgt("repo") === s("s_repo") && tgt("path") === s("s_path"), "full_outer")
+    // acceptEqualSeq: a REPLICATION sink must let an equal-seq source row
+    // win — the primary's own SQL MERGE may mutate payload while leaving
+    // seq unassigned, and its change feed carries that row with the seq
+    // the mirror already holds (changesBetween doc). Still idempotent:
+    // re-applying the same row overwrites with identical values. Ingest
+    // paths keep the strict `>` (an event never outranks itself).
+    val seqWins =
+      if (acceptEqualSeq) col("s_seq") >= col("seq")
+      else col("s_seq") > col("seq")
+    val takeSrc = col("s_seq").isNotNull &&
+      (col("seq").isNull || seqWins)
+    // DELETE arm writes a tombstone (nulled payload, deleted=true, src seq)
+    // rather than dropping the row — see `deleted` column doc above.
+    val srcIsDel = col("s_op") === "D"
+    val matched = col("seq").isNotNull && !coalesce(col("deleted"), lit(false))
+    def arm(c: String) = {
+      // column-subset semantics: on a matched UPDATE, non-listed columns
+      // keep the target value; inserts take the source value regardless
+      val pickSrc: Column = updateColumns match {
+        case Some(cols) if !cols.contains(c) => !matched
+        case _ => lit(true)
       }
-      val bucketCounts = src.groupBy("_b").count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val isDel = col("op") === "D"
-      val rows = src.select(
-        col("repo"), col("path"),
-        when(isDel, lit(null)).otherwise(col("commit")).as("commit"),
-        when(isDel, lit(null)).otherwise(col("language")).as("language"),
-        when(isDel, lit(null)).otherwise(col("content")).as("content"),
-        when(isDel, lit(null)).otherwise(col("size_bytes")).as("size_bytes"),
-        col("seq"), isDel.as("deleted"), col("_b"))
-      val newFiles = writeSnapshotFiles(rows.drop("_b"), newToken())
-      // MOR append: touched buckets get a REWRITTEN manifest (old files +
-      // appended files — still one manifest per bucket, O(touched) IO);
-      // untouched manifests carried by reference. Appends never derive
-      // from target data, so a lost CAS always rebases: recombine the
-      // touched-bucket manifests against the new head and re-commit.
-      var base = h0
-      var attempts = retries
-      while (true) {
-        val (touchedRefs, carried) =
-          base.manifests.partition(r => bucketCounts.contains(r.bucket))
-        val newRefs =
-          writeManifests(newToken(), newFiles ++ touchedRefs.flatMap(loadManifest))
-        firePreCommitHook()
-        try {
-          val snap = Snapshot(
-            version = base.version + 1, parent = base.version, lastBatchId = batchId,
-            schemaIds = base.schemaIds,
-            manifests = carried ++ newRefs,
-            summary = Map(
-              "batchId" -> batchId.toString,
-              "srcRows" -> bucketCounts.values.sum.toString,
-              "touchedBuckets" -> bucketCounts.size.toString,
-              "totalRows" -> (carried.map(_.rowCount).sum + newRefs.map(_.rowCount).sum).toString),
-            mode = Mor)
-          commitSnapshot(snap, expectedParent = base.version)
-          return MergeStats(applied = true, snap.version, bucketCounts.values.sum,
-            bucketCounts.size, snap.totalRows)
-        } catch { case e: ConcurrentCommitException =>
-          if (attempts <= 0) throw e
-          attempts -= 1
-          commitBackoff(attempts, retries + backoffBase)
-          // checkedHead, not head: a concurrent REBUCKET changes the key
-          // modulus — our pending files were bucketed with the old one, so
-          // rebasing onto the new head would mis-bucket them silently
-          // (every later lookup prunes to the wrong manifest). Fail loudly
-          // with the re-open guidance instead.
-          val h1 = checkedHead()
-          if (batchId <= h1.lastBatchId)
-            return MergeStats(applied = false, h1.version, 0L, 0, h1.totalRows)
-          if (newFiles.exists(f => !Files.exists(Paths.get(root, f.path))))
-            return mergeAppend(spark, batch, batchId, h1, attempts,
-              srcKeyUnique = true, // vacuum raced us; already validated
-              backoffBase = backoffBase + (retries - attempts))
-          base = h1
-        }
-      }
-      throw new IllegalStateException("unreachable")
-    } finally src.unpersist()
+      when(takeSrc, when(srcIsDel, lit(null)).otherwise(
+        when(pickSrc, col(s"s_$c")).otherwise(col(c))))
+        .otherwise(col(c)).as(c)
+    }
+    j.select(
+      coalesce(col("repo"), col("s_repo")).as("repo"),
+      coalesce(col("path"), col("s_path")).as("path"),
+      arm("commit"), arm("language"), arm("content"), arm("size_bytes"),
+      when(takeSrc, col("s_seq")).otherwise(col("seq")).as("seq"),
+      when(takeSrc, srcIsDel).otherwise(coalesce(col("deleted"), lit(false)))
+        .as("deleted"))
   }
 
   /** Write rows as tokened bucket files (repartitioned on the key-hash
@@ -1151,8 +1160,8 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
     * [[graft.plans.GraftSqlMergeRule]]): applies parsed WHEN clauses in
     * statement order — first matching clause wins, SQL-standard — against
     * this table via ONE full-outer equi-join on the key, rewriting only the
-    * key-hash buckets the source touches (same COW write path as the
-    * Dataset [[merge]]).
+    * key-hash buckets the source touches (same COW write path and the same
+    * lost-CAS verdict as the Dataset [[merge]], minus the fence).
     *
     * Semantics differences from the CDC [[merge]] (deliberate — this is the
     * ad-hoc SQL surface, not the ordered change-stream path):
@@ -1171,7 +1180,7 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
                matched: Seq[SqlMergeClause],
                notMatched: Seq[SqlMergeClause],
                notBySource: Seq[SqlMergeClause] = Nil,
-               retries: Int = 3, backoffBase: Int = 0): MergeStats = {
+               retries: Int = 3): MergeStats = {
     val h0 = checkedHead()
     require(h0.mode == Cow, "SQL MERGE INTO targets copy-on-write tables")
     val dataCols = schema.fieldNames.filterNot(_ == "deleted").toSeq
@@ -1182,10 +1191,8 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
       // update the same target row twice — nondeterministic; reject.
       requireUniqueKeys(src, expr(srcKeySql("repo")), expr(srcKeySql("path")),
         "aggregate the source to one row per key")
-      val srcTouched = src
-        .select(pmod(hash(expr(srcKeySql("repo")), expr(srcKeySql("path"))),
-          lit(numBuckets)).as("_b"))
-        .groupBy("_b").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val srcTouched = bucketCounts(src.select(
+        pmod(hash(expr(srcKeySql("repo")), expr(srcKeySql("path"))), lit(numBuckets)).as("_b")))
       // WHEN NOT MATCHED BY SOURCE acts on target rows whose key the source
       // does NOT carry — those can live in ANY bucket, so bucket pruning is
       // unsound and EVERY bucket id becomes part of the rewrite — including
@@ -1195,19 +1202,9 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
       // SOURCE clause should have deleted (write skew). (Iceberg's MERGE
       // does the same: such statements scan — and conflict on — the table.)
       val touched =
-        if (notBySource.isEmpty) srcTouched
-        else (0 until numBuckets).map(b => b -> srcTouched.getOrElse(b, 0L)).toMap
+        if (notBySource.isEmpty) srcTouched.keySet
+        else (0 until numBuckets).toSet
       val srcRows = srcTouched.values.sum
-      // NOTE: the carry-set is NOT captured here — a rebase recomputes it
-      // against the rebased base (the `keep` filter in the commit loop);
-      // capturing h0's untouched manifests would resurrect stale ones
-      val touchedRefs = h0.manifests.filter(r => touched.contains(r.bucket))
-      val tgt = readFiles(spark, touchedRefs.flatMap(loadManifest))
-      val live = tgt.filter(!col("deleted")).drop("deleted")
-        .withColumn("_t_exists", lit(true)).alias(tAlias)
-      val tombs = tgt.filter(col("deleted"))
-
-      val joined = live.join(src, expr(onSql), "full_outer")
       val tEx = coalesce(col("_t_exists"), lit(false))
       val sEx = coalesce(col("_s_exists"), lit(false))
       val isM = tEx && sEx
@@ -1231,9 +1228,6 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
       notBySource.zipWithIndex.foreach { case (c, i) =>
         act = act.when(tEx && !sEx && c.condSql.map(expr).getOrElse(lit(true)), lit(s"b$i"))
       }
-      val withAct = joined.withColumn("_act",
-        act.otherwise(when(tEx, lit("keep")).otherwise(lit("drop"))))
-
       val dropped = (matched.zipWithIndex.collect {
         case (c, i) if c.kind == "delete" => s"m$i" } ++
         notBySource.zipWithIndex.collect {
@@ -1256,53 +1250,27 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
         }
         base.otherwise(col(s"$tAlias.$name")).cast(field.dataType).as(name)
       }
-      val kept = withAct.filter(!col("_act").isin(dropped.toSeq: _*))
-        .select(dataCols.map(valueFor) :+ lit(false).as("deleted"): _*)
-      // a key the merge (re)creates supersedes its CDC tombstone — keeping
-      // both would give the next CDC merge two target rows for one key
-      val tombsKept = tombs.join(kept.select("repo", "path"),
-        Seq("repo", "path"), "left_anti")
-      val merged = kept.unionByName(tombsKept)
+      val summary = Map("sqlMerge" -> "true", "srcRows" -> srcRows.toString,
+        "touchedBuckets" -> touched.size.toString)
 
-      val token = newToken()
-      val newRefs = writeManifests(token, writeSnapshotFiles(merged, token))
-      var base = h0
-      var attempts = retries
-      while (true) {
-        firePreCommitHook()
-        try {
-          val keep = base.manifests.filterNot(r => touched.contains(r.bucket))
-          val snap = Snapshot(
-            version = base.version + 1, parent = base.version,
-            lastBatchId = base.lastBatchId,
-            schemaIds = base.schemaIds, manifests = keep ++ newRefs,
-            summary = Map(
-              "sqlMerge" -> "true",
-              "srcRows" -> srcRows.toString,
-              "touchedBuckets" -> touched.size.toString,
-              "totalRows" -> (keep.map(_.rowCount).sum + newRefs.map(_.rowCount).sum).toString),
-            mode = base.mode)
-          commitSnapshot(snap, expectedParent = base.version)
-          return MergeStats(applied = true, snap.version, srcRows, touched.size, snap.totalRows)
-        } catch { case e: ConcurrentCommitException =>
-          if (attempts <= 0) throw e
-          attempts -= 1
-          commitBackoff(attempts, retries + backoffBase)
-          // checkedHead, not head: a rebase across a concurrent REBUCKET
-          // would commit old-modulus files and stamp the stale modulus
-          // back into the snapshot (see the COW merge loop) — fail loudly
-          val h1 = checkedHead()
-          val conflict = touched.keySet.exists(b => refOf(base, b) != refOf(h1, b)) &&
-            !onlyCompactions(base.version, h1.version)
-          if (conflict || pendingVanished(newRefs)) // stale target rows (or a
-            // concurrent vacuum reclaimed our pending files) → recompute
-            return mergeSql(spark, source, tAlias, sAlias, onSql, srcKeySql,
-              matched, notMatched, notBySource, attempts,
-              backoffBase = backoffBase + (retries - attempts))
-          base = h1
-        }
+      commitLoop(h0, retries) { h =>
+        val tgt = readBuckets(spark, h, touched)
+        val live = tgt.filter(!col("deleted")).drop("deleted")
+          .withColumn("_t_exists", lit(true)).alias(tAlias)
+        val withAct = live.join(src, expr(onSql), "full_outer").withColumn("_act",
+          act.otherwise(when(tEx, lit("keep")).otherwise(lit("drop"))))
+        val kept = withAct.filter(!col("_act").isin(dropped.toSeq: _*))
+          .select(dataCols.map(valueFor) :+ lit(false).as("deleted"): _*)
+        // a key the merge (re)creates supersedes its CDC tombstone — keeping
+        // both would give the next CDC merge two target rows for one key
+        val tombsKept = tgt.filter(col("deleted")).join(kept.select("repo", "path"),
+          Seq("repo", "path"), "left_anti")
+        val token = newToken()
+        val newRefs = writeManifests(token, writeSnapshotFiles(kept.unionByName(tombsKept), token))
+        Right(Pending(nextSnapshot(_, touched, newRefs, summary),
+          s => MergeStats(applied = true, s.version, srcRows, touched.size, s.totalRows),
+          rewriteVerdict(touched, newRefs)))
       }
-      throw new IllegalStateException("unreachable")
     } finally src.unpersist()
   }
 
@@ -1324,8 +1292,8 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
     */
   def insertStrict(spark: SparkSession, source: DataFrame,
                    retries: Int = 3): MergeStats = {
-    require(checkedHead().mode == Cow,
-      "SQL INSERT INTO targets copy-on-write tables")
+    val h0 = checkedHead()
+    require(h0.mode == Cow, "SQL INSERT INTO targets copy-on-write tables")
     val dataCols = schema.fieldNames.filterNot(_ == "deleted").toSeq
     val byLower = source.columns.map(c => c.toLowerCase -> c).toMap
     val unknown = source.columns.filterNot(c => dataCols.contains(c.toLowerCase))
@@ -1345,14 +1313,11 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
     try {
       requireUniqueKeys(src, col("repo"), col("path"),
         "an INSERT source must carry each key at most once")
-      var attemptsLeft = retries
-      while (true) {
-        val h0 = checkedHead()
-        val bucketCounts = src.groupBy("_b").count().collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val touched = bucketCounts.keySet
-        val touchedRefs = h0.manifests.filter(r => touched.contains(r.bucket))
-        val tgt = readFiles(spark, touchedRefs.flatMap(loadManifest))
+      val counts = bucketCounts(src)
+      val touched = counts.keySet
+      val srcRows = counts.values.sum
+      commitLoop(h0, retries) { h =>
+        val tgt = readBuckets(spark, h, touched)
         val dup = tgt.filter(!col("deleted"))
           .join(src, Seq("repo", "path"), "left_semi")
           .select("repo", "path").limit(1).collect()
@@ -1372,160 +1337,90 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
           .unionByName(tombsKept)
         val token = newToken()
         val newRefs = writeManifests(token, writeSnapshotFiles(merged, token))
-        firePreCommitHook()
-        try {
-          val keep = h0.manifests.filterNot(r => touched.contains(r.bucket))
-          val snap = Snapshot(h0.version + 1, h0.version, h0.lastBatchId,
-            h0.schemaIds, keep ++ newRefs,
-            Map("sqlInsert" -> "true",
-              "srcRows" -> bucketCounts.values.sum.toString,
-              "touchedBuckets" -> touched.size.toString,
-              "totalRows" -> (keep.map(_.rowCount).sum + newRefs.map(_.rowCount).sum).toString),
-            mode = h0.mode)
-          commitSnapshot(snap, expectedParent = h0.version)
-          return MergeStats(applied = true, snap.version, bucketCounts.values.sum,
-            touched.size, snap.totalRows)
-        } catch { case e: ConcurrentCommitException =>
-          if (attemptsLeft <= 0) throw e
-          attemptsLeft -= 1
-          commitBackoff(attemptsLeft, retries)
-        }
+        Right(Pending(nextSnapshot(_, touched, newRefs, Map("sqlInsert" -> "true",
+            "srcRows" -> srcRows.toString, "touchedBuckets" -> touched.size.toString)),
+          s => MergeStats(applied = true, s.version, srcRows, touched.size, s.totalRows)))
       }
-      throw new IllegalStateException("unreachable")
     } finally src.unpersist()
   }
 
-  /** True when every commit in (fromV, toV] is a LIVE-STATE-PRESERVING
-    * layout rewrite (compaction — never a merge, truncate, or rebucket).
-    * Then a CAS loser's computed merge output is still valid even for its
-    * touched buckets (it was derived from rows a compaction only
-    * re-laid-out), so it may REBASE instead of recomputing — Iceberg's
-    * "rewrite commits don't conflict with data commits" rule. Without
-    * this, a cadence compactor forces every concurrent writer into a full
-    * recompute per tick and can starve them outright (observed in
-    * ConcurrencyStress before the fix). Tombstones a compaction GC'd may
-    * be re-introduced by the rebased output — sound, they only ever
-    * guard against older out-of-order events. A missing (expired)
-    * intermediate snapshot falls back to recompute.
+  // --- maintenance: the one bucket-rewrite path ----------------------------
+
+  /** Rewrite the buckets `pick` selects from each attempt's head: read
+    * them, resolve MOR duplicates (per-bucket-closed: a key's files all
+    * live in its bucket, so LWW over a bucket subset sees every version it
+    * needs), optionally GC tombstones, write sorted (optionally size-split)
+    * output under an `outBuckets` modulus, and carry every other manifest
+    * by reference. The output derives from every picked row, so ANY
+    * interleaved commit forces a recompute against the new head (ingest
+    * always wins over maintenance). Returns the non-empty buckets
+    * rewritten; an empty pick commits nothing.
     */
-  private def onlyCompactions(fromV: Int, toV: Int): Boolean =
-    (fromV + 1 to toV).forall { v =>
-      snapshotRetained(v) && snapshotAt(v).summary.contains("compaction")
+  private def rewriteBuckets(spark: SparkSession, retries: Int, pick: Snapshot => Set[Int],
+                             summary: Int => Map[String, String],
+                             gcTombstones: Boolean = false,
+                             targetFileRows: Option[Long] = None,
+                             outBuckets: Int = numBuckets): Set[Int] =
+    commitLoop(checkedHead(), retries) { h =>
+      val picked = pick(h)
+      if (picked.isEmpty) Left(Set.empty[Int])
+      else {
+        val rewritten = h.manifests.map(_.bucket).filter(picked)
+        val physical = readBuckets(spark, h, picked)
+        val resolved = if (h.mode == Mor) resolve(physical) else physical
+        val live = if (gcTombstones) resolved.filter(!col("deleted")) else resolved
+        val token = newToken()
+        val newRefs = writeManifests(token, writeSnapshotFiles(live, token,
+          sorted = true, maxRowsPerFile = targetFileRows, buckets = outBuckets))
+        Right(Pending(nextSnapshot(_, picked, newRefs, summary(rewritten.size), buckets = outBuckets),
+          _ => rewritten.toSet))
+      }
     }
 
-  /** True when any of this writer's PENDING (not yet committed) manifest
-    * or data files has disappeared — a concurrent vacuum with a zero/short
-    * grace window ran between our data write and the commit CAS. A rebase
-    * retry must then recompute (re-writing fresh files) instead of
-    * committing a snapshot that references deleted files.
-    */
-  private def pendingVanished(refs: Seq[ManifestRef]): Boolean =
-    refs.exists { r =>
-      !Files.exists(Paths.get(root, r.path)) ||
-        loadManifest(r).exists(f => !Files.exists(Paths.get(root, f.path)))
-    }
+  /** Picks every bucket id under this handle's modulus (a whole-table
+    * rewrite, committed even when the table is empty). */
+  private def allBuckets: Snapshot => Set[Int] = _ => (0 until numBuckets).toSet
+
+  /** Summary of a bucket-subset compaction that rewrote `n` buckets. */
+  private def incrementalSummary(n: Int) =
+    Map("compaction" -> "incremental", "compactedBuckets" -> n.toString)
 
   /** Compaction: fold each key to its single latest version and coalesce
     * small files (one per bucket); lastBatchId (the exactly-once fence)
     * carries over. Tombstones are RETAINED by default — they still guard
     * against late out-of-order batches carrying older upserts; pass
     * `gcTombstones = true` only when no earlier-seq data can still arrive
-    * (end of stream / past the ingest low-watermark). At scale this would
-    * be incremental (pick buckets by tombstone ratio / file count from
-    * manifest stats); the snapshot protocol is identical.
+    * (end of stream / past the ingest low-watermark). Returns the number of
+    * buckets rewritten.
     *
     * `maxBucketsPerWave` (guide §5 — bound the working set): a full-table
     * rewrite as ONE job needs "heap + shuffle < RAM" for the whole table
     * (the r5 256M-event/32-core threshold compaction was OOM-killed
     * exactly there, bench/results_r5.jsonl `soak_256M_mor_cadence`).
-    * With Some(k), buckets are rewritten in waves of ≤ k — each wave one
-    * bounded job + its own live-state-preserving commit (same
-    * `compaction` summary key, so concurrent merges still rebase over it)
-    * — and peak memory is O(k / numBuckets × table) instead of O(table).
-    * A crash between waves leaves a valid, partially-compacted table.
+    * With Some(k), buckets are rewritten in waves — each wave one bounded
+    * job + its own live-state-preserving commit (same `compaction`
+    * summary key, so concurrent merges still rebase over it) — and peak
+    * memory is O(k / numBuckets × table) instead of O(table). Each wave
+    * takes up to k non-empty buckets of the CURRENT head that this call has
+    * not rewritten yet, so a bucket first filled by a merge between waves
+    * (or during a wave's retry) is still compacted. A crash between waves
+    * leaves a valid, partially-compacted table.
     */
   def compact(spark: SparkSession, gcTombstones: Boolean = false,
               retries: Int = 3, targetFileRows: Option[Long] = None,
-              maxBucketsPerWave: Option[Int] = None): Unit = {
-    if (maxBucketsPerWave.exists(_ > 0)) {
-      val k = maxBucketsPerWave.get
-      checkedHead().manifests.map(_.bucket).sorted.grouped(k).foreach { wave =>
-        compactSelected(spark, wave.toSet, gcTombstones, retries, targetFileRows)
-      }
-      return
+              maxBucketsPerWave: Option[Int] = None): Int =
+    maxBucketsPerWave.filter(_ > 0) match {
+      case None =>
+        rewriteBuckets(spark, retries, allBuckets, _ => Map("compaction" -> "true"),
+          gcTombstones, targetFileRows).size
+      case Some(k) =>
+        val done = scala.collection.mutable.Set.empty[Int]
+        Iterator.continually(rewriteBuckets(spark, retries,
+            _.manifests.map(_.bucket).filterNot(done).sorted.take(k).toSet,
+            incrementalSummary, gcTombstones, targetFileRows))
+          .takeWhile(_.nonEmpty).foreach(done ++= _)
+        done.size
     }
-    // retry LOOP, not recursion with a shrunk budget: commitBackoff must
-    // see the TRUE attempt number so the jittered cap escalates toward
-    // 1600ms under sustained contention instead of replaying the first step
-    var attemptsLeft = retries
-    while (true) {
-      val h0 = checkedHead()
-      // mode-aware: MOR resolves LWW duplicates before the rewrite, so the
-      // compacted snapshot is unique-per-key in both modes
-      val resolved = if (h0.mode == Mor) resolve(readFiles(spark, filesOf(h0)))
-                     else readFiles(spark, filesOf(h0))
-      val live = if (gcTombstones) resolved.filter(!col("deleted")) else resolved
-      val token = newToken()
-      val newRefs = writeManifests(token, writeSnapshotFiles(live, token, sorted = true, maxRowsPerFile = targetFileRows))
-      firePreCommitHook()
-      try {
-        commitSnapshot(Snapshot(h0.version + 1, h0.version, h0.lastBatchId,
-          h0.schemaIds, newRefs,
-          Map("compaction" -> "true",
-            "totalRows" -> newRefs.map(_.rowCount).sum.toString),
-          mode = h0.mode),
-          expectedParent = h0.version)
-        return
-      } catch { case e: ConcurrentCommitException =>
-        // compaction reads every bucket, so ANY interleaved commit conflicts:
-        // recompute against the new head (ingest always wins over compaction)
-        if (attemptsLeft <= 0) throw e
-        attemptsLeft -= 1
-        commitBackoff(attemptsLeft, retries)
-      }
-    }
-  }
-
-  /** Rewrite ONE fixed bucket subset (a compaction wave): read + resolve +
-    * rewrite the picked buckets, carry every other manifest by reference,
-    * commit with the `compaction` summary key (live-state preserving — a
-    * concurrent merge's rebase treats it as non-conflicting). The commit
-    * protocol matches [[compactBuckets]]; the selection is the caller's.
-    */
-  private def compactSelected(spark: SparkSession, picked: Set[Int],
-                              gcTombstones: Boolean, retries: Int,
-                              targetFileRows: Option[Long]): Int = {
-    var attemptsLeft = retries
-    while (true) {
-      val h0 = checkedHead()
-      val (pickedRefs, carried) = h0.manifests.partition(r => picked(r.bucket))
-      if (pickedRefs.isEmpty) return 0
-      val physical = readFiles(spark, pickedRefs.flatMap(loadManifest))
-      // per-bucket-closed: a key's files all live in its bucket, so MOR
-      // LWW resolution over a bucket subset sees every version it needs
-      val resolved = if (h0.mode == Mor) resolve(physical) else physical
-      val live = if (gcTombstones) resolved.filter(!col("deleted")) else resolved
-      val token = newToken()
-      val newRefs = writeManifests(token,
-        writeSnapshotFiles(live, token, sorted = true, maxRowsPerFile = targetFileRows))
-      firePreCommitHook()
-      try {
-        commitSnapshot(Snapshot(h0.version + 1, h0.version, h0.lastBatchId,
-          h0.schemaIds, carried ++ newRefs,
-          Map("compaction" -> "incremental",
-            "compactedBuckets" -> picked.size.toString,
-            "totalRows" -> (carried.map(_.rowCount).sum + newRefs.map(_.rowCount).sum).toString),
-          mode = h0.mode),
-          expectedParent = h0.version)
-        return pickedRefs.size
-      } catch { case e: ConcurrentCommitException =>
-        if (attemptsLeft <= 0) throw e
-        attemptsLeft -= 1
-        commitBackoff(attemptsLeft, retries)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Incremental compaction: fold ONLY the buckets whose manifest lists
     * more than `maxFilesPerBucket` data files (the MOR read-amplification
@@ -1534,17 +1429,13 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
     * reference. This is what runs on a cadence against a 10^10-row table;
     * full [[compact]] is the end-of-stream / table-maintenance variant.
     * Returns the number of buckets compacted. Same tombstone-retention
-    * default and fence semantics as [[compact]]; a lost CAS recomputes
-    * against the new head (ingest wins).
+    * default and fence semantics as [[compact]]; a lost CAS re-picks and
+    * recomputes against the new head (ingest wins).
     */
   def compactBuckets(spark: SparkSession, maxFilesPerBucket: Int = 4,
                      gcTombstones: Boolean = false, retries: Int = 3,
                      targetFileRows: Option[Long] = None,
                      minFileBytes: Option[Long] = None): Int = {
-    // loop (see compact): backoff must escalate with the true attempt count
-    var attemptsLeft = retries
-    while (true) {
-    val h0 = checkedHead()
     // Two Iceberg-style triggers. Both are evaluated against the file
     // count the rewrite itself would PRODUCE (ceil(rows/targetFileRows))
     // — not against 1 — otherwise a size-split compaction immediately
@@ -1578,44 +1469,22 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
     // — appends are unsorted by design there, and re-picking every bucket
     // with any unsorted file would rewrite the table each cadence tick
     // (read amplification is MOR's trigger).
-    def layoutDegraded(r: ManifestRef): Boolean =
-      h0.mode == Cow && targetFileRows.isDefined && r.sortedFiles < r.fileCount
-    val picked = h0.manifests
-      .filter(r => readAmplified(r) || smallFiles(r) || layoutDegraded(r))
-      .map(_.bucket).toSet
-    if (picked.isEmpty) return 0
-    val (pickedRefs, carried) = h0.manifests.partition(r => picked(r.bucket))
-    val physical = readFiles(spark, pickedRefs.flatMap(loadManifest))
-    val resolved = if (h0.mode == Mor) resolve(physical) else physical
-    val live = if (gcTombstones) resolved.filter(!col("deleted")) else resolved
-    val token = newToken()
-    val newRefs = writeManifests(token, writeSnapshotFiles(live, token, sorted = true, maxRowsPerFile = targetFileRows))
-    firePreCommitHook()
-    try {
-      commitSnapshot(Snapshot(h0.version + 1, h0.version, h0.lastBatchId,
-        h0.schemaIds, carried ++ newRefs,
-        Map("compaction" -> "incremental",
-          "compactedBuckets" -> picked.size.toString,
-          "totalRows" -> (carried.map(_.rowCount).sum + newRefs.map(_.rowCount).sum).toString),
-        mode = h0.mode),
-        expectedParent = h0.version)
-      return picked.size
-    } catch { case e: ConcurrentCommitException =>
-      if (attemptsLeft <= 0) throw e
-      attemptsLeft -= 1
-      commitBackoff(attemptsLeft, retries)
-    }
-    }
-    throw new IllegalStateException("unreachable")
+    def layoutDegraded(h: Snapshot, r: ManifestRef): Boolean =
+      h.mode == Cow && targetFileRows.isDefined && r.sortedFiles < r.fileCount
+    rewriteBuckets(spark, retries,
+      h => h.manifests.filter(r => readAmplified(r) || smallFiles(r) || layoutDegraded(h, r))
+        .map(_.bucket).toSet,
+      incrementalSummary, gcTombstones, targetFileRows).size
   }
 
   /** Rewrite every row under a NEW key-hash modulus (the maintenance op for
     * "the table outgrew its bucket count": more buckets = more write
-    * parallelism per merge and smaller per-bucket manifests). Runs with the
-    * [[compact]] commit protocol — sorted, optionally size-split output —
-    * and commits the new modulus IN the snapshot (authoritative), then
-    * refreshes the meta/table.json opener cache. Old snapshots keep their
-    * own recorded modulus, so time travel still reads them correctly.
+    * parallelism per merge and smaller per-bucket manifests). Runs the
+    * [[compact]] rewrite — sorted, optionally size-split output, tombstones
+    * retained — and commits the new modulus IN the snapshot
+    * (authoritative), then refreshes the meta/table.json opener cache. Old
+    * snapshots keep their own recorded modulus, so time travel still reads
+    * them correctly.
     *
     * Returns a FRESH handle bound to the new modulus. This handle and any
     * other stale one fail loudly afterwards (see [[checkedHead]]) — a
@@ -1624,35 +1493,8 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
   def rebucket(spark: SparkSession, newBuckets: Int,
                targetFileRows: Option[Long] = None, retries: Int = 3): LakeTable = {
     require(newBuckets > 0, s"rebucket: bucket count must be positive, got $newBuckets")
-    // loop (see compact): backoff must escalate with the true attempt count
-    var attemptsLeft = retries
-    var committed = false
-    while (!committed) {
-      val h0 = checkedHead()
-      val physical = readFiles(spark, filesOf(h0))
-      // MOR duplicate versions fold here (same as compact) — the rebucketed
-      // table starts at one row per key either way; tombstones are retained
-      val resolved = if (h0.mode == Mor) resolve(physical) else physical
-      val token = newToken()
-      val newRefs = writeManifests(token, writeSnapshotFiles(resolved, token,
-        sorted = true, maxRowsPerFile = targetFileRows, buckets = newBuckets))
-      firePreCommitHook()
-      try {
-        commitSnapshot(Snapshot(h0.version + 1, h0.version, h0.lastBatchId,
-          h0.schemaIds, newRefs,
-          Map("rebucket" -> s"$numBuckets->$newBuckets",
-            "totalRows" -> newRefs.map(_.rowCount).sum.toString),
-          mode = h0.mode, numBuckets = newBuckets),
-          expectedParent = h0.version)
-        committed = true
-      } catch { case e: ConcurrentCommitException =>
-        // any interleaved commit conflicts (rebucket reads every bucket):
-        // recompute against the new head, ingest wins
-        if (attemptsLeft <= 0) throw e
-        attemptsLeft -= 1
-        commitBackoff(attemptsLeft, retries)
-      }
-    }
+    rewriteBuckets(spark, retries, allBuckets, _ => Map("rebucket" -> s"$numBuckets->$newBuckets"),
+      targetFileRows = targetFileRows, outBuckets = newBuckets)
     // sidecar refresh: a CACHE of the now-committed snapshot value (openers
     // prefer the snapshot; the sidecar only serves pre-rebucket readers of
     // the file). Atomic replace, after the commit — a crash between the two
@@ -1877,6 +1719,27 @@ object LakeTable {
     * concurrent writer; commit paths catch it and rebase/retry.
     */
   final class ConcurrentCommitException(msg: String) extends RuntimeException(msg)
+
+  /** What a writer that lost the HEAD CAS does next, decided by the
+    * operation against the new head ([[LakeTable.commitLoop]]).
+    */
+  private sealed trait Verdict[+A]
+  /** The pending files are still valid: rebuild the snapshot on the new head. */
+  private case object Rebase extends Verdict[Nothing]
+  /** The pending output derives from rows the new head changed: run the stage again. */
+  private case object Recompute extends Verdict[Nothing]
+  /** The new head already carries this batch: stop with `result` (not applied). */
+  private final case class AlreadyApplied[A](result: A) extends Verdict[A]
+
+  /** One stage's output, ready to commit: `snapshotOn` builds the snapshot
+    * for a base head (again on each rebase), `result` is the operation's
+    * answer once it commits, `onLost(base, newHead)` the verdict after a
+    * lost CAS.
+    */
+  private final case class Pending[A](
+      snapshotOn: Snapshot => Snapshot,
+      result: Snapshot => A,
+      onLost: (Snapshot, Snapshot) => Verdict[A] = (_: Snapshot, _: Snapshot) => Recompute)
 
   /** Atomically persist a consumer cursor (tmp file + ATOMIC_MOVE +
     * REPLACE_EXISTING): a reader never observes a torn write — the ONE

@@ -778,10 +778,9 @@ object GraftMaintTvf {
         "usage: graft_compact('<table root>'[, <maxFilesPerBucket>])")
     }
     val table = LakeTable.open(root)
-    val before = table.head()
     val compacted = bound match {
       case Some(maxFiles) => table.compactBuckets(session, maxFiles)
-      case None => table.compact(session); before.manifests.size
+      case None => table.compact(session)
     }
     val after = table.head()
     val rows = Seq((after.version, compacted, after.totalRows, after.totalFiles))

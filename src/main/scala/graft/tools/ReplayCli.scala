@@ -91,22 +91,27 @@ object ReplayCli {
           sys.exit(2)
         }
       }
+      // GRAFT_COMPACT_WAVE=<k>: memory-bounded wave compaction (≤k buckets
+      // per job+commit) — the r6 fix for full-table rewrites whose working
+      // set exceeds the heap (r5 256M/32c OOM); 0/negative = one job
+      val wave = sys.env.get("GRAFT_COMPACT_WAVE").map { v =>
+        scala.util.Try(v.trim.toInt).getOrElse {
+          System.err.println(s"usage: GRAFT_COMPACT_WAVE=<max buckets per wave, integer>; got '$v'")
+          sys.exit(2)
+        }
+      }.filter(_ > 0)
       val spark = Sessions.local(sys.env.getOrElse("GRAFT_CORES", "8").toInt, "graft-compact")
       // open (NOT create-with-default-buckets): compacting with a bucket
       // count different from the table's would silently rebucket the data
       val table = LakeTable.open(s"$workDir/table")
       val before = table.head()
       val tombs = table.readWithTombstones(spark).filter(col("deleted")).count()
-      // GRAFT_COMPACT_WAVE=<k>: memory-bounded wave compaction (≤k buckets
-      // per job+commit) — the r6 fix for full-table rewrites whose working
-      // set exceeds the heap (r5 256M/32c OOM)
-      val wave = sys.env.get("GRAFT_COMPACT_WAVE").map(_.toInt).filter(_ > 0)
-      table.compact(spark, gcTombstones = gc, targetFileRows = targetRows,
+      val buckets = table.compact(spark, gcTombstones = gc, targetFileRows = targetRows,
         maxBucketsPerWave = wave)
       val after = table.head()
       val tombMsg = if (gc) f"dropped $tombs%,d tombstones"
                     else f"retained $tombs%,d tombstones"
-      println(f"[compact] v${before.version}→v${after.version} " +
+      println(f"[compact] v${before.version}→v${after.version} buckets $buckets " +
         f"rows ${before.totalRows}%,d→${after.totalRows}%,d " +
         f"($tombMsg) files ${before.totalFiles}→${after.totalFiles}")
       spark.stop()

@@ -169,12 +169,77 @@ class MultiWriterSpec extends SparkSpec {
     val t2 = new LakeTable(s"$base/t", 4)
     t1.merge(spark, rows(("r1", "p1", 1L, "v1")), 0L)
     t1.preCommitHook = () => { t2.merge(spark, rows(("r9", "p9", 5L, "late")), 1L); () }
-    t1.compact(spark) // must retry against the post-merge head
+    val n = t1.compact(spark) // must retry against the post-merge head
     val state = t1.read(spark).select("repo", "path", "seq", "content")
       .as[(String, String, Long, String)].collect().toSet
     assert(state === Set(("r1", "p1", 1L, "v1"), ("r9", "p9", 5L, "late")),
       "ingest wins over compaction; compaction folds the new state")
     assert(t1.head().lastBatchId === 1L, "retried compaction carries the fence")
+    // the count is of the head the retry compacted, not of the head at the
+    // call: the racer's bucket is counted too
+    assert(n === Set(t1.bucketOf("r1", "p1"), t1.bucketOf("r9", "p9")).size)
+  }
+
+  test("wave compaction picks each wave from the current head: a bucket filled mid-call is compacted") {
+    val base = tmpDir("mw-waves")
+    val t1 = LakeTable(s"$base/t", 4, LakeTable.Mor)
+    val t2 = new LakeTable(s"$base/t", 4)
+    t1.merge(spark, rows(("r1", "p1", 1L, "v1")), 0L)
+    t1.merge(spark, rows(("r1", "p1", 2L, "v2")), 1L)
+    val filled = t1.head().manifests.map(_.bucket).toSet
+    val (er, ep) = (2 to 400).map(i => (s"x$i", s"y$i"))
+      .find { case (r, p) => !filled(t1.bucketOf(r, p)) }.get
+    // before the first wave's CAS, two versions of one key land in a
+    // bucket that was empty when compact() started
+    t1.preCommitHook = () => {
+      t2.merge(spark, rows((er, ep, 5L, "old")), 2L)
+      t2.merge(spark, rows((er, ep, 7L, "new")), 3L)
+      ()
+    }
+    val n = t1.compact(spark, maxBucketsPerWave = Some(1))
+    val h = t1.head()
+    assert(h.manifests.forall(_.fileCount == 1),
+      s"every bucket must end compacted to one file: ${h.manifests}")
+    assert(n === 2 && h.manifests.size === 2)
+    assert(h.totalRows === 2L, "MOR duplicates folded")
+    val state = t1.read(spark).select("repo", "path", "seq", "content")
+      .as[(String, String, Long, String)].collect().toSet
+    assert(state === Set(("r1", "p1", 2L, "v2"), (er, ep, 7L, "new")))
+    assert(h.lastBatchId === 3L)
+  }
+
+  test("retries = 0: every commit path throws on a lost CAS and leaves the racer's head") {
+    val base = tmpDir("mw-budget")
+    val on = "`t`.`repo` = `s`.`repo` AND `t`.`path` = `s`.`path`"
+    val keys = Map("repo" -> "`s`.`repo`", "path" -> "`s`.`path`")
+    val insertAll = Seq(LakeTable.SqlMergeClause("insert", None, Nil, star = true, starAlias = "s"))
+    def mine = rows(("r5", "p5", 3L, "mine"))
+    val cases: Seq[(String, String, LakeTable => Any)] = Seq(
+      ("cow-merge", LakeTable.Cow, _.merge(spark, mine, 5L, None, retries = 0)),
+      ("mor-merge", LakeTable.Mor, _.merge(spark, mine, 5L, None, retries = 0)),
+      ("merge-sql", LakeTable.Cow, _.mergeSql(spark, mine.alias("s"), "t", "s", on, keys,
+        matched = Nil, notMatched = insertAll, retries = 0)),
+      ("insert", LakeTable.Cow, _.insertStrict(spark,
+        Seq(("r5", "p5", "mine", 3L)).toDF("repo", "path", "content", "seq"), retries = 0)),
+      ("compact", LakeTable.Mor, _.compact(spark, retries = 0)),
+      ("compact-waves", LakeTable.Mor, _.compact(spark, retries = 0, maxBucketsPerWave = Some(1))),
+      ("compact-buckets", LakeTable.Mor, _.compactBuckets(spark, maxFilesPerBucket = 1, retries = 0)),
+      ("rebucket", LakeTable.Mor, _.rebucket(spark, 8, retries = 0)))
+    cases.foreach { case (name, mode, op) =>
+      val t1 = LakeTable(s"$base/$name", 4, mode)
+      val t2 = new LakeTable(s"$base/$name", 4)
+      // two versions of one key: two files in its bucket on a MOR table
+      t1.merge(spark, rows(("r1", "p1", 1L, "v1")), 0L)
+      t1.merge(spark, rows(("r1", "p1", 2L, "v2")), 1L)
+      var racer = -1
+      t1.preCommitHook = () => {
+        racer = t2.merge(spark, rows(("r1", "p1", 9L, "racer")), 2L).version
+      }
+      intercept[LakeTable.ConcurrentCommitException](op(t1))
+      assert(racer > 0, s"$name: the racer must have committed")
+      assert(t1.head().version === racer, s"$name: head must stay at the racer's commit")
+      assert(t1.lookup(spark, "r1", "p1").select("content").as[String].collect() === Array("racer"))
+    }
   }
 
   test("expireSnapshots + vacuum reclaim COW rewrites and arbitration orphans") {
