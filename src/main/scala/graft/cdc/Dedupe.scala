@@ -67,19 +67,22 @@ object Dedupe {
     * same semantics as [[lww]], but planned as ObjectHashAggregateExec
     * (map-side combine, no sort) — `max_by` over a struct-of-strings buffer
     * forces SortAggregateExec, which sorts every payload byte and
-    * anti-scales with cores. This is the production path.
+    * anti-scales with cores. This is [[lwwBroadcast]]'s fallback. A key
+    * whose every seq is null has no winner (LwwAgg skips null seqs and
+    * yields null) and is dropped, as [[lwwBroadcast]] drops it.
     */
   def lwwTyped(df: DataFrame, keys: Seq[String], seqCol: String): DataFrame = {
     val payload = df.columns.filterNot(keys.contains)
     df.groupBy(keys.map(q): _*)
       .agg(LwwAgg.lww(struct(payload.map(q): _*), q(seqCol)).as("_w"))
+      .where(col("_w").isNotNull)
       .select(keys.map(q) ++ payload.map(c => col("_w").getField(c).as(c)): _*)
       .select(df.columns.map(q).toIndexedSeq: _*)
   }
 
   /** Salted two-phase variant of [[lwwTyped]] (north-rule hot-key path):
     * partial LWW per (key, salt) then final LWW per key — both phases
-    * hash-based.
+    * hash-based. All-null-seq keys are dropped, as in [[lwwTyped]].
     */
   def lwwTypedSalted(df: DataFrame, keys: Seq[String], seqCol: String,
                      saltBuckets: Int = 16): DataFrame = {
@@ -92,6 +95,7 @@ object Dedupe {
     partial
       .groupBy(keyCols: _*)
       .agg(LwwAgg.lww(col("_w"), col("_w").getField(seqCol)).as("_w"))
+      .where(col("_w").isNotNull)
       .select(keyCols ++ payload.map(c => col("_w").getField(c).as(c)): _*)
       .select(df.columns.map(q).toIndexedSeq: _*)
   }
@@ -106,23 +110,62 @@ object Dedupe {
     * into its buffer on every seq advance — O(events) copies on
     * monotone-seq logs, measured 4-8 s/1M×1.1KB events vs ~1 s here).
     *
-    * Scale-adaptive: when the winner set exceeds `maxKeys` (too big to
-    * broadcast — the steady-state shape for huge backfill batches) it falls
-    * back to [[lwwTyped]], whose shuffle is O(map-side-combined winners).
+    * Pass 1 brings at most `maxKeys + 1` winner rows to the driver and the
+    * join broadcasts them from there: the collect is both the size check
+    * and the broadcast input, so no count or checkpoint job runs. When the
+    * winner set exceeds `maxKeys` (the steady-state shape for huge backfill
+    * batches) it falls back to [[lwwTyped]], whose shuffle is
+    * O(map-side-combined winners).
+    *
+    * Sizing `maxKeys` (`spark.graft.lww.broadcastMaxKeys` in the Tailer):
+    * while the broadcast is built the driver holds up to `maxKeys + 1`
+    * winners three times over — as collected rows, as their internal copy
+    * and in the hash relation. For repo/path keys of ~60 characters that
+    * is an estimated ~0.5 KB of driver heap per winner (object-size
+    * arithmetic, not a measurement), so ~0.5 GB at the 1M default; each
+    * executor holds one copy of the relation. Keep `maxKeys` × 0.5 KB a
+    * small fraction of the driver heap; past the cap a batch takes the
+    * fallback, which needs no driver memory.
+    *
     * Equal-(key, seq) duplicates (idempotent re-delivered writes) collapse
     * to one arbitrary row — the same contract as LwwAgg's first-seen tie.
+    * Pass 1 counts the rows at each key's winning seq ([[SeqMaxCount]]), so
+    * the collapsing shuffle runs only for a batch that holds such a
+    * duplicate.
+    *
+    * A key whose every seq is null has no winner and is dropped, exactly
+    * as [[lwwTyped]] drops it, so the output does not depend on `maxKeys`.
     */
   def lwwBroadcast(df: DataFrame, keys: Seq[String], seqCol: String,
-                   maxKeys: Long = 1000000L): DataFrame = {
-    val keyCols = keys.map(q)
-    // eager localCheckpoint: materialized once, read by both the count
-    // below and the broadcast build (blocks reclaimed by ContextCleaner)
-    val winners = df.groupBy(keyCols: _*).agg(max(q(seqCol)).as(seqCol))
-      .localCheckpoint()
-    if (winners.count() > maxKeys) lwwTyped(df, keys, seqCol)
-    else df.join(broadcast(winners), keys :+ seqCol)
-      .dropDuplicates(keys)
-      .select(df.columns.map(q).toIndexedSeq: _*)
+                   maxKeys: Long = 1000000L): DataFrame =
+    lwwBroadcastOrEmpty(df, keys, seqCol, maxKeys, df)
+      .getOrElse(df.select(df.columns.map(q).toIndexedSeq: _*).where(lit(false)))
+
+  /** [[lwwBroadcast]] that reports an input without winners as None, from
+    * pass 1 alone (no separate emptiness probe). `full` holds the same rows
+    * as `df` and is what the join-back — or the [[lwwTyped]] fallback —
+    * scans in full; a caller passes `df` under a pass-through tap to see
+    * every input row on that one full-width scan.
+    */
+  private[graft] def lwwBroadcastOrEmpty(df: DataFrame, keys: Seq[String], seqCol: String,
+                                         maxKeys: Long, full: DataFrame): Option[DataFrame] = {
+    val winners = df.groupBy(keys.map(q): _*).agg(SeqMaxCount.of(q(seqCol)).as("_m"))
+      .select(keys.map(q) :+ col("_m.max").as(seqCol) :+ col("_m.n").as("_n"): _*)
+      .where(q(seqCol).isNotNull)
+    val cap = math.min(math.max(maxKeys, 0L), Int.MaxValue - 1L).toInt
+    val rows = winners.limit(cap + 1).collect()
+    if (rows.isEmpty) None
+    else if (rows.length > cap) Some(lwwTyped(full, keys, seqCol))
+    else {
+      val local = df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), winners.schema)
+        .drop("_n")
+      val joined = full.join(broadcast(local), keys :+ seqCol)
+      // a key with two rows at its winning seq matches twice; only then
+      // does the join-back need the shuffle that collapses them
+      val unique = if (rows.exists(_.getAs[Long]("_n") > 1)) joined.dropDuplicates(keys)
+                   else joined
+      Some(unique.select(df.columns.map(q).toIndexedSeq: _*))
+    }
   }
 
   /** Argmax-join variant: max(seq) per key (fixed-width buffer → pure

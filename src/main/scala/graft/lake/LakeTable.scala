@@ -1008,7 +1008,12 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
     val mor = h0.mode == Mor
     require(!mor || updateColumns.isEmpty,
       "column-subset merge needs the target row — COW mode only")
-    val src = batch.withColumn("_b", bucketExpr).persist()
+    // src is cached only when a second job reads it: a guard, or COW's
+    // touched-bucket count ahead of its rewrite. A MOR append of a
+    // deduped batch reads it once, in the file write.
+    val cached = !mor || !srcKeyUnique
+    val src0 = batch.withColumn("_b", bucketExpr)
+    val src = if (cached) src0.persist() else src0
     try {
       // guards run on the PERSISTED frame so their job warms the cache the
       // touched-bucket/rewrite jobs reuse (not a second lineage recompute)
@@ -1018,37 +1023,43 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
           "LWW-dedupe the batch first (e.g. Dedupe.lwwTyped) or pass srcKeyUnique=true " +
             "if deduped by construction")
       }
-      // one job yields both the touched-bucket set and the source row count
-      val counts = bucketCounts(src)
-      val touched = counts.keySet
-      val srcRows = counts.values.sum
-      val summary = Map("batchId" -> batchId.toString, "srcRows" -> srcRows.toString,
-        "touchedBuckets" -> touched.size.toString)
-      def applied(s: Snapshot) = MergeStats(applied = true, s.version, srcRows, touched.size, s.totalRows)
+      def summary(srcRows: Long, touched: Set[Int]) = Map("batchId" -> batchId.toString,
+        "srcRows" -> srcRows.toString, "touchedBuckets" -> touched.size.toString)
+      def applied(srcRows: Long, touched: Set[Int])(s: Snapshot) =
+        MergeStats(applied = true, s.version, srcRows, touched.size, s.totalRows)
       def fenced(v: (Snapshot, Snapshot) => Verdict[Nothing])(base: Snapshot, head: Snapshot) =
         if (batchId <= head.lastBatchId) AlreadyApplied(notApplied(head)) else v(base, head)
-      commitLoop(h0, retries) { h =>
-        if (mor) {
-          // MOR append: O(batch) writes; touched buckets get a REWRITTEN
-          // manifest (old files + appended files) on each base
-          val newFiles = writeSnapshotFiles(appendRows(src), newToken())
-          Right(Pending(base => nextSnapshot(base, touched,
-              writeManifests(newToken(), newFiles ++ loadAll(base.manifests.filter(r => touched(r.bucket)))),
-              summary, Some(batchId)),
-            applied, fenced((_, _) =>
-              if (newFiles.exists(f => !Files.exists(Paths.get(root, f.path)))) Recompute
-              else Rebase)))
-        } else {
+      if (mor) commitLoop(h0, retries) { _ =>
+        // MOR append: O(batch) writes; touched buckets get a REWRITTEN
+        // manifest (old files + appended files) on each base. The files
+        // written carry their bucket and footer row count, so they give
+        // the touched buckets and the source rows with no job of their own.
+        val newFiles = writeSnapshotFiles(appendRows(src), newToken())
+        val touched = newFiles.map(_.bucket).toSet
+        val srcRows = newFiles.map(_.rowCount).sum
+        Right(Pending(base => nextSnapshot(base, touched,
+            writeManifests(newToken(), newFiles ++ loadAll(base.manifests.filter(r => touched(r.bucket)))),
+            summary(srcRows, touched), Some(batchId)),
+          applied(srcRows, touched), fenced((_, _) =>
+            if (newFiles.exists(f => !Files.exists(Paths.get(root, f.path)))) Recompute
+            else Rebase)))
+      } else {
+        // one job yields both the touched-bucket set and the source row
+        // count, which COW needs before it reads the target buckets
+        val counts = bucketCounts(src)
+        val touched = counts.keySet
+        val srcRows = counts.values.sum
+        commitLoop(h0, retries) { h =>
           // COW: touched buckets are fully rewritten → fresh manifest each;
           // untouched bucket manifests carried by reference (O(touched) IO)
           val merged = cowMerged(readBuckets(spark, h, touched), src, updateColumns, acceptEqualSeq)
           val token = newToken()
           val newRefs = writeManifests(token, writeSnapshotFiles(merged, token))
-          Right(Pending(nextSnapshot(_, touched, newRefs, summary, Some(batchId)),
-            applied, fenced(rewriteVerdict(touched, newRefs))))
+          Right(Pending(nextSnapshot(_, touched, newRefs, summary(srcRows, touched), Some(batchId)),
+            applied(srcRows, touched), fenced(rewriteVerdict(touched, newRefs))))
         }
       }
-    } finally src.unpersist()
+    } finally if (cached) src.unpersist()
   }
 
   /** MOR guard: same-key rows with DIFFERENT seqs are the MOR log shape

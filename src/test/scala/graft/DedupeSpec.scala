@@ -6,9 +6,10 @@ import graft.gen.ChangeLogGen
 import graft.gen.ChangeLogGen.GenConfig
 import graft.model.Model._
 import org.apache.spark.sql.functions._
-/** Property tests for the LWW core (SURVEY §5.2): all three dedupe
-  * implementations agree with each other and with a HashMap fold, at any
-  * parallelism, and are idempotent under log duplication. (Properties run
+/** Property tests for the LWW core (SURVEY §5.2): every dedupe
+  * implementation — the production `lwwBroadcast` on both sides of its
+  * broadcast cap included — agrees with the others and with a HashMap
+  * fold, at any parallelism, and is idempotent under log duplication. (Properties run
   * as seeded multi-trial loops: the offline cache has no scalatestplus
   * bridge, so generators are hand-rolled and fully deterministic.)
   */
@@ -24,10 +25,16 @@ class DedupeSpec extends SparkSpec {
     ChangeLogGen.write(spark, GenConfig(seed = 11L, nEvents = 10000L, nFiles = 4), dir)
     dir
   }
+  private val keys = Seq("repo", "path")
+  /** lwwBroadcast below its cap (broadcast join-back) and above it
+    * (the lwwTyped fallback).
+    */
+  private val broadcastCaps = Seq(0L, 1000000L)
+
   private lazy val normalized =
     Normalize(spark.read.schema(changeLogSchema).parquet(dedupeLogDir)).cache()
 
-  test("all six LWW implementations agree on a generated log") {
+  test("every LWW implementation agrees on a generated log") {
     val a = lwwKeys(Dedupe.lww(normalized, Seq("repo", "path"), "seq"))
     assert(a.nonEmpty)
     assert(a === lwwKeys(Dedupe.lwwSalted(normalized, Seq("repo", "path"), "seq", 8)))
@@ -35,6 +42,9 @@ class DedupeSpec extends SparkSpec {
     assert(a === lwwKeys(Dedupe.lwwTyped(normalized, Seq("repo", "path"), "seq")))
     assert(a === lwwKeys(Dedupe.lwwTypedSalted(normalized, Seq("repo", "path"), "seq", 8)))
     assert(a === lwwKeys(Dedupe.lwwJoin(normalized, Seq("repo", "path"), "seq")))
+    broadcastCaps.foreach { cap =>
+      assert(a === lwwKeys(Dedupe.lwwBroadcast(normalized, keys, "seq", cap)), s"maxKeys $cap")
+    }
   }
 
   test("lwwJoin collapses re-delivered identical (key, max-seq) rows to one row per key") {
@@ -50,9 +60,11 @@ class DedupeSpec extends SparkSpec {
   test("every variant resolves payload/key columns with dots in the name literally") {
     val df = Seq(("r1", 1L, 10), ("r1", 2L, 20), ("r2", 7L, 70))
       .toDF("id", "seq", "meta.size")
-    val fns: Seq[(org.apache.spark.sql.DataFrame, Seq[String], String) => org.apache.spark.sql.DataFrame] =
-      Seq(Dedupe.lww, Dedupe.lwwTyped, Dedupe.lwwJoin, Dedupe.lwwWindow,
-        Dedupe.lwwSalted(_, _, _, 4), Dedupe.lwwTypedSalted(_, _, _, 4))
+    type Lww = (org.apache.spark.sql.DataFrame, Seq[String], String) => org.apache.spark.sql.DataFrame
+    val fns: Seq[Lww] =
+      Seq[Lww](Dedupe.lww, Dedupe.lwwTyped, Dedupe.lwwJoin, Dedupe.lwwWindow,
+        Dedupe.lwwSalted(_, _, _, 4), Dedupe.lwwTypedSalted(_, _, _, 4)) ++
+        broadcastCaps.map[Lww](cap => Dedupe.lwwBroadcast(_, _, _, cap))
     fns.foreach { f =>
       val out = f(df, Seq("id"), "seq")
       assert(out.columns.toSeq === df.columns.toSeq, "original column order")
@@ -83,6 +95,10 @@ class DedupeSpec extends SparkSpec {
     Seq(2, 16, 64).foreach { n =>
       val r = lwwKeys(Dedupe.lww(normalized.repartition(n), Seq("repo", "path"), "seq"))
       assert(r === base, s"parallelism $n changed the result")
+      broadcastCaps.foreach { cap =>
+        assert(lwwKeys(Dedupe.lwwBroadcast(normalized.repartition(n), keys, "seq", cap)) === base,
+          s"lwwBroadcast maxKeys $cap: parallelism $n changed the result")
+      }
     }
   }
 
@@ -90,6 +106,13 @@ class DedupeSpec extends SparkSpec {
     val once = lwwKeys(Dedupe.lww(normalized, Seq("repo", "path"), "seq"))
     val twice = lwwKeys(Dedupe.lww(normalized.union(normalized), Seq("repo", "path"), "seq"))
     assert(once === twice)
+    // every winner is an equal-(key, seq) duplicate here: lwwBroadcast's
+    // join-back matches both copies and must still emit one row per key
+    broadcastCaps.foreach { cap =>
+      val out = Dedupe.lwwBroadcast(normalized.union(normalized), keys, "seq", cap)
+      assert(lwwKeys(out) === once, s"maxKeys $cap")
+      assert(out.count() === once.size.toLong, s"maxKeys $cap: one row per key")
+    }
   }
 
   test("property: LWW over random event sets equals HashMap fold oracle (20 seeded trials)") {
@@ -102,16 +125,73 @@ class DedupeSpec extends SparkSpec {
         (s"r${k % 5}", s"p$k", i.toLong, rnd.alphanumeric.take(8).mkString)
       }
       val df = rows.toDF("repo", "path", "seq", "content")
-      val got = Dedupe.lwwSalted(df, Seq("repo", "path"), "seq", 4)
-        .select($"repo", $"path", $"seq", $"content")
-        .as[(String, String, Long, String)].collect()
-        .map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
+      def resolved(out: org.apache.spark.sql.DataFrame) = {
+        val rs = out.select($"repo", $"path", $"seq", $"content")
+          .as[(String, String, Long, String)].collect()
+        val m = rs.map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
+        assert(m.size === rs.length, s"trial $trial: one row per key")
+        m
+      }
       val oracle = rows.foldLeft(Map.empty[(String, String), (Long, String)]) {
         case (m, (r, p, s, c)) =>
           val k = (r, p)
           if (m.get(k).forall(_._1 < s)) m.updated(k, (s, c)) else m
       }
-      assert(got === oracle, s"trial $trial")
+      assert(resolved(Dedupe.lwwSalted(df, keys, "seq", 4)) === oracle, s"trial $trial")
+      broadcastCaps.foreach { cap =>
+        assert(resolved(Dedupe.lwwBroadcast(df, keys, "seq", cap)) === oracle,
+          s"trial $trial, lwwBroadcast maxKeys $cap")
+      }
+    }
+  }
+
+  test("property: lwwBroadcast output is independent of maxKeys when keys have all-null seqs") {
+    // a key whose every seq is null has no winner: the broadcast join-back
+    // and the lwwTyped fallback must both drop it, so crossing the cap
+    // (batch size) never changes which keys a batch carries
+    (1 to 10).foreach { trial =>
+      val rnd = new scala.util.Random(trial * 104729L)
+      val n = 40 + rnd.nextInt(200)
+      val rows = (0 until n).map { i =>
+        val k = rnd.nextInt(30)
+        // keys 0-9 only ever carry null seqs, 10-19 carry a mix
+        val seq = if (k < 10 || (k < 20 && rnd.nextBoolean())) None else Some(i.toLong)
+        (s"r${k % 4}", s"p$k", seq, rnd.alphanumeric.take(6).mkString)
+      }
+      val df = rows.toDF("repo", "path", "seq", "content")
+      def resolved(out: org.apache.spark.sql.DataFrame) = out
+        .select($"repo", $"path", $"seq", $"content")
+        .as[(String, String, Option[Long], String)].collect().toSet
+      def out(cap: Long) = resolved(Dedupe.lwwBroadcast(df, keys, "seq", cap))
+      val below = out(1000000L)
+      assert(out(0L) === below, s"trial $trial: maxKeys changed the output")
+      assert(resolved(Dedupe.lwwTypedSalted(df, keys, "seq", 4)) === below,
+        s"trial $trial: the salted path agrees")
+      val oracle = rows.collect { case (r, p, Some(s), c) => (r, p, s, c) }
+        .groupBy(x => (x._1, x._2)).values.map(_.maxBy(_._3))
+        .map { case (r, p, s, c) => (r, p, Option(s), c) }.toSet
+      assert(below === oracle, s"trial $trial: all-null-seq keys dropped, others keep max seq")
+    }
+  }
+
+  test("property: seq_max_count equals a fold over seqs with nulls and ties, at any parallelism") {
+    (1 to 10).foreach { trial =>
+      val rnd = new scala.util.Random(trial * 31337L)
+      val rows = (0 until 100 + rnd.nextInt(300)).map { _ =>
+        (s"k${rnd.nextInt(12)}", if (rnd.nextInt(5) == 0) None else Some(rnd.nextInt(6).toLong))
+      }
+      val oracle = rows.groupBy(_._1).map { case (k, xs) =>
+        val seqs = xs.flatMap(_._2)
+        k -> (if (seqs.isEmpty) (None, 0L)
+              else (Some(seqs.max), seqs.count(_ == seqs.max).toLong))
+      }
+      Seq(1, 3, 8).foreach { parts =>
+        val got = rows.toDF("k", "seq").repartition(parts)
+          .groupBy("k").agg(graft.cdc.SeqMaxCount.of(col("seq")).as("m"))
+          .select($"k", $"m.max", $"m.n").as[(String, Option[Long], Long)].collect()
+          .map(r => r._1 -> ((r._2, r._3))).toMap
+        assert(got === oracle, s"trial $trial, $parts partitions")
+      }
     }
   }
 

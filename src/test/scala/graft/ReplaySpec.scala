@@ -7,6 +7,7 @@ import graft.model.Model._
 import graft.stream.Tailer
 import graft.stream.Tailer.TailerConfig
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Golden end-to-end: deterministic log → streamed replay → LakeTable;
   * final state must equal the single-threaded HashMap oracle on every
@@ -492,5 +493,103 @@ class ReplaySpec extends SparkSpec {
     assert(spark.read.parquet(s"$base/lineage")
       .agg(sum("rowsApplied")).head.getLong(0) === 1L)
     assert(table.read(spark).count() === 1L)
+  }
+
+  /** A MOR table and tailer config for direct applyBatch calls. */
+  private def morBatchTarget(name: String): (LakeTable, TailerConfig) = {
+    val base = tmpDir(name)
+    val table = LakeTable(s"$base/table", 8, LakeTable.Mor)
+    (table, TailerConfig(logDir = "unused", tableRoot = s"$base/table",
+      checkpointDir = s"$base/ckpt", lineageDir = s"$base/lineage",
+      metricsDir = s"$base/metrics", numBuckets = 8, tableMode = LakeTable.Mor))
+  }
+
+  /** A 4-file log read back as one batch: one input partition per file. */
+  private lazy val multiPartLog: String = {
+    val d = tmpDir("multipart-log")
+    ChangeLogGen.write(spark, GenConfig(seed = 5L, nEvents = 3000L, nFiles = 4), d)
+    d
+  }
+  private def multiPartRaw = spark.read.schema(changeLogSchema).parquet(multiPartLog)
+
+  test("lineage rides the batch scan: per-partition rows equal the standalone aggregate") {
+    val (table, tc) = morBatchTarget("lineage-fused")
+    val raw = multiPartRaw
+    assert(raw.rdd.getNumPartitions >= 3, "the batch spans several input partitions")
+    Tailer.applyBatch(table, tc)(raw, 0L)
+    def stats(df: org.apache.spark.sql.DataFrame) =
+      df.select("partitionId", "firstOffset", "lastOffset", "rowsApplied", "bytesIn")
+        .as[(Int, Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    val expected = stats(raw.groupBy(spark_partition_id().as("partitionId"))
+      .agg(min("seq").as("firstOffset"), max("seq").as("lastOffset"),
+        count(lit(1)).as("rowsApplied"),
+        sum(coalesce(length(col("payload")).cast("long"), lit(0L))).as("bytesIn")))
+    assert(expected.size >= 3)
+    val written = spark.read.parquet(tc.lineageDir)
+    assert(written.select("batchId").distinct().as[Long].collect().toSeq === Seq(0L))
+    assert(stats(written) === expected)
+    assert(table.head().lastBatchId === 0L)
+  }
+
+  test("a fenced redelivery still appends its lineage, and readLineage sums to the batch") {
+    val (table, tc) = morBatchTarget("lineage-fenced")
+    val raw = multiPartRaw
+    val events = raw.count()
+    Tailer.applyBatch(table, tc)(raw, 0L)
+    val v = table.headVersion()
+    val before = spark.read.parquet(tc.lineageDir).count()
+    Tailer.applyBatch(table, tc)(raw, 0L) // batchId <= lastBatchId: the merge scans nothing
+    assert(table.headVersion() === v, "the fenced merge committed nothing")
+    val all = spark.read.parquet(tc.lineageDir)
+    assert(all.count() === 2 * before, "the redelivery appended its own attempt")
+    assert(all.select("attempt").distinct().count() === 2L)
+    assert(Tailer.readLineage(spark, tc.lineageDir)
+      .agg(sum("rowsApplied")).head.getLong(0) === events)
+  }
+
+  test("a MOR batch reads its log at most twice and runs no isEmpty or count job") {
+    import org.apache.spark.scheduler._
+    val (table, tc) = morBatchTarget("scan-guard")
+    val raw = multiPartRaw
+    val scans = new java.util.concurrent.atomic.AtomicInteger()
+    val probes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // every file scan in a MOR batch (no compaction, no bucket reads) is
+    // a scan of the batch's log files
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scans.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.stageInfos.map(_.name)
+          .filter(n => n.startsWith("isEmpty at") || n.startsWith("count at"))
+          .foreach(probes.add)
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftbridge.BusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      Tailer.applyBatch(table, tc)(raw, 0L)
+      org.apache.spark.graftbridge.BusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(table.head().lastBatchId === 0L, "the batch applied")
+    assert(scans.get() <= 2, s"log scans: ${scans.get()}")
+    assert(probes.isEmpty, s"probe jobs: $probes")
+  }
+
+  test("metrics sinks follow the session of each call and drop what a stopped context buffered") {
+    // a session stop and restart in a child JVM, so the suite's shared
+    // context keeps running
+    val dir = s"${tmpDir("sink-restart")}/metrics"
+    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.toSeq
+    val opens: Seq[String] = jvm.sliding(2).toSeq.flatMap {
+      case Seq("--add-opens", v) => Seq("--add-opens", v)
+      case _ => Nil
+    } ++ jvm.filter(_.startsWith("--add-opens="))
+    val cmd: Seq[String] = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++ opens ++
+      Seq("-cp", sys.props("java.class.path"), "graft.MetricsSinkRestart", dir)
+    val out = new StringBuilder
+    val rc = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
+      l => out.append(l).append('\n'), l => out.append(l).append('\n')))
+    assert(rc === 0, out.toString)
   }
 }
