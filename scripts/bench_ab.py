@@ -2,20 +2,26 @@
 """Interleaved A/B of the benchmark: a parent revision against this checkout.
 
     python3 scripts/bench_ab.py PARENT_REV WORKLOAD N [--seconds 10] [--seed0 500]
+                                [--parent-dir /tmp] [--out runs.jsonl]
 
-Exports PARENT_REV (any git revision) into its own directory under /tmp
-with `git archive`, so each side builds and keeps its own .bench_build.
+Exports PARENT_REV (any git revision) into its own directory under
+--parent-dir (default /tmp) with `git archive`, so each side builds and
+keeps its own .bench_build.
 Then runs `perfbench/run.py --workload WORKLOAD --seed S --seconds SECONDS
 --trace 0` N times per side, one pair per seed S = seed0, seed0 + 1, ...,
 alternating which side runs first. It changes nothing under perfbench/.
 
 For every end-to-end metric of BENCHMARK.json it prints each side's median
 and quartiles, how many pairs the change won (ties count for neither
-side), whether the gain rule holds — the change wins at least nine tenths
-of the pairs and the medians differ by more than the parent's
-interquartile range — and whether the change's median is worse than the
-parent's by more than the metric's bound. A run that is not correct or
-has failed operations is reported and makes the script exit 1.
+side), whether every change run beats every parent run, whether the gain
+rule holds — the change wins at least nine tenths of the pairs and the
+medians differ by more than the parent's interquartile range — and the
+bound check. The bound check reads WORSE when the change's median is
+worse than the parent's by more than the metric's bound; `unresolved`
+when it is not, but the parent's own spread (interquartile range over
+median) is wider than the bound and not every change run beats every
+parent run; and ok otherwise. A run that is not correct or has failed
+operations is reported and makes the script exit 1.
 """
 import argparse
 import json
@@ -31,11 +37,11 @@ def log(msg):
     print(f"[bench_ab] {msg}", file=sys.stderr, flush=True)
 
 
-def export(rev):
-    """The parent's tracked files in /tmp/bench-ab-<commit>, exported once."""
+def export(rev, parent_dir):
+    """The parent's tracked files in PARENT_DIR/bench-ab-<commit>, exported once."""
     sha = subprocess.run(["git", "rev-parse", "--verify", f"{rev}^{{commit}}"], cwd=ROOT,
                          check=True, capture_output=True, text=True).stdout.strip()
-    d = f"/tmp/bench-ab-{sha[:12]}"
+    d = os.path.join(parent_dir, f"bench-ab-{sha[:12]}")
     if not os.path.isfile(os.path.join(d, "perfbench", "run.py")):
         os.makedirs(d, exist_ok=True)
         archive = subprocess.Popen(["git", "archive", sha], cwd=ROOT, stdout=subprocess.PIPE)
@@ -72,11 +78,13 @@ def main():
     ap.add_argument("--seconds", type=int, default=10)
     ap.add_argument("--seed0", type=int, default=500)
     ap.add_argument("--out", help="also write every run's result as JSON lines here")
+    ap.add_argument("--parent-dir", default="/tmp",
+                    help="directory the parent revision is exported under (default /tmp)")
     a = ap.parse_args()
     if a.n < 2:
         sys.exit("N must be at least 2")
 
-    sides = {"parent": export(a.parent), "change": ROOT}
+    sides = {"parent": export(a.parent, a.parent_dir), "change": ROOT}
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         metrics = json.load(fh)["end_to_end"]
     runs = {"parent": [], "change": []}
@@ -102,7 +110,7 @@ def main():
     def cell(q):
         return f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]"
     print(f"{'metric':14s} {'parent med [q1, q3]':26s} {'change med [q1, q3]':26s} "
-          f"{'delta':>7s} {'wins':>7s} {'gain rule':>9s} {'bound':>6s}")
+          f"{'delta':>7s} {'wins':>7s} {'all beat':>8s} {'gain rule':>9s} {'bound':>10s}")
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         ps = [p["metrics"][name]["value"] for p, _ in pairs]
@@ -112,12 +120,20 @@ def main():
             continue
         pq, cq = quartiles(ps), quartiles(cs)
         wins = sum(1 for p, c in zip(ps, cs) if (c < p if lower else c > p))
+        all_beat = max(cs) < min(ps) if lower else min(cs) > max(ps)
         delta = (cq[1] - pq[1]) / pq[1] if pq[1] else 0.0
         worse = delta if lower else -delta
         rule = wins * 10 >= 9 * len(pairs) and -worse * pq[1] > pq[2] - pq[0]
+        spread = (pq[2] - pq[0]) / pq[1] if pq[1] else 0.0
+        if worse > m["bound"]:
+            bound = "WORSE"
+        elif spread > m["bound"] and not all_beat:
+            bound = "unresolved"
+        else:
+            bound = "ok"
         print(f"{name:14s} {cell(pq):26s} {cell(cq):26s} {delta * 100:+6.1f}% "
-              f"{wins:3d}/{len(pairs):<3d} {'holds' if rule else 'no':>9s} "
-              f"{'ok' if worse <= m['bound'] else 'WORSE':>6s}")
+              f"{wins:3d}/{len(pairs):<3d} {'yes' if all_beat else 'no':>8s} "
+              f"{'holds' if rule else 'no':>9s} {bound:>10s}")
     if bad:
         print("not correct or with failed operations: " +
               ", ".join(f"{s} seed {seed}" for s, seed in bad))

@@ -2,7 +2,10 @@ package graft.lake
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -760,9 +763,28 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
     }
   }
 
+  /** The one scan constructor: a parquet relation over exactly `files`,
+    * planned from their manifest entries ([[ManifestFileIndex]]) — no
+    * existence check or listing per file. Paths are qualified the way
+    * `spark.read.parquet` qualifies its inputs (`file:///…`): the equal-seq
+    * `input_file_name` tie-break in [[resolve]] compares them. A column a
+    * file lacks reads as null. Legacy entries without a recorded size stat
+    * only that file; a file deleted after planning fails the action with
+    * an error naming it.
+    */
   private def readFiles(spark: SparkSession, files: Seq[DataFile]): DataFrame =
     if (files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(files.map(f => s"$root/${f.path}"): _*)
+    else {
+      val fs = new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val statuses = files.map { f =>
+        val p = fs.makeQualified(new HPath(s"$root/${f.path}"))
+        if (f.sizeBytes > 0) new FileStatus(f.sizeBytes, false, 1, 0L, 0L, p)
+        else fs.getFileStatus(p)
+      }
+      spark.baseRelationToDataFrame(HadoopFsRelation(new ManifestFileIndex(statuses),
+        partitionSchema = new StructType(), dataSchema = schema, bucketSpec = None,
+        fileFormat = new ParquetFileFormat, options = Map.empty)(spark))
+    }
 
   /** Point lookup with bucket pruning + manifest key-bound file skipping:
     * the key's bucket manifest is read, then files whose recorded
@@ -770,13 +792,18 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
     * footer is touched — after sort-order compaction with a target file
     * size, that is typically ONE file of the bucket. (Reference analog:
     * per-key doc fetch, PantherLocalWrapper.java:373-383.)
+    *
+    * The key's rows meet in one partition (`coalesce(1)` above the key
+    * filter — bounded by construction: one key's versions in one bucket),
+    * so the MOR resolve needs no exchange and the lookup runs as one stage
+    * and one job.
     */
   def lookup(spark: SparkSession, repo: String, path: String): DataFrame = {
     val h = checkedHead() // bucketOf must use the head snapshot's modulus
     val b = bucketOf(repo, path)
     liveRows(
       readFiles(spark, filesOf(h, b).filter(fileMayContain(_, repo, path)))
-        .filter(col("repo") === repo && col("path") === path),
+        .filter(col("repo") === repo && col("path") === path).coalesce(1),
       h.mode)
   }
 

@@ -509,6 +509,13 @@ class CdfStreamSpec extends SparkSpec {
     assert(winner === "second-file",
       "monotone write tokens must make the LATER equal-seq write win")
 
+    // the point lookup (resolved in the scan's own stage) and the repo scan
+    // apply the same file-path tie-break
+    assert(primary.lookup(spark, "r1", "p1").select("content").as[String].collect().toSeq
+      === Seq(winner), "lookup must agree with read()")
+    assert(primary.readWhereRepo(spark, "r1").select("content").as[String].collect().toSeq
+      === Seq(winner), "readWhereRepo must agree with read()")
+
     // changesBetween full-window after-image = the same winner
     val viaCdc = primary.changesBetween(spark, 0, head)
       .filter($"op" =!= "D").select("content").as[String].collect().toSeq

@@ -599,4 +599,33 @@ class OpsSpec extends SparkSpec {
         |FROM kmv_in GROUP BY g""".stripMargin).as[(String, Long)].head()
     assert(math.abs(viaSql._2 - 1000L).toDouble / 1000 <= 0.5, s"k=16 rough estimate: $viaSql")
   }
+
+  test("property: sorted_intersect_count equals size(array_intersect) on sorted duplicate-free sets") {
+    // the kernel's precondition: both sides sorted ascending, no duplicates.
+    // Fixed edge cases (empty, disjoint, identical, nested) plus seeded random pairs
+    val fixed = Seq(
+      (Seq.empty[Long], Seq.empty[Long]), (Seq.empty[Long], Seq(1L, 2L)), (Seq(3L), Seq.empty[Long]),
+      (Seq(1L, 3L, 5L), Seq(2L, 4L, 6L)), (Seq(-5L, 0L, 7L), Seq(-5L, 0L, 7L)),
+      (Seq(1L, 2L, 3L, 4L), Seq(2L, 3L)), (Seq(Long.MinValue, 0L), Seq(0L, Long.MaxValue)))
+    val rnd = new scala.util.Random(4242L)
+    def randomSet(): Seq[Long] = {
+      val range = 1 + rnd.nextInt(60)
+      Seq.fill(rnd.nextInt(25))(rnd.nextInt(range).toLong - range / 2).distinct.sorted
+    }
+    val pairs = fixed ++ Seq.fill(400)((randomSet(), randomSet()))
+    val df = pairs.toDF("a", "b")
+    val got = df.select(
+      graft.ops.VecExpr.sortedIntersectCount(col("a"), col("b")),
+      size(array_intersect(col("a"), col("b"))), col("a"), col("b"))
+      .as[(Int, Int, Seq[Long], Seq[Long])].collect()
+    assert(got.length === pairs.size)
+    got.foreach { case (kernel, reference, a, b) =>
+      assert(kernel === reference, s"a=$a b=$b")
+      // the interpreted path agrees with the generated code
+      val lit = (xs: Seq[Long]) => org.apache.spark.sql.catalyst.expressions.Literal.create(
+        xs.toArray, org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, false))
+      assert(graft.ops.SortedIntersectCount(lit(a), lit(b)).eval() === reference, s"a=$a b=$b")
+    }
+    assert(got.exists(_._2 == 0) && got.exists(g => g._2 > 0 && g._2 < g._3.size))
+  }
 }
