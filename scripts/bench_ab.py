@@ -20,8 +20,12 @@ bound check. The bound check reads WORSE when the change's median is
 worse than the parent's by more than the metric's bound; `unresolved`
 when it is not, but the parent's own spread (interquartile range over
 median) is wider than the bound and not every change run beats every
-parent run; and ok otherwise. A run that is not correct or has failed
-operations is reported and makes the script exit 1.
+parent run; and ok otherwise. Beside each time metric's raw delta it
+prints the calibration-normalised one: each run's value times its host
+calibration (the mean of the pre and post `calib_mhps_per_thread` in its
+report under .bench_build/perfbench/results/), so a host that ran slower
+during one side's runs does not read as a change. A run that is not
+correct or has failed operations is reported and makes the script exit 1.
 """
 import argparse
 import json
@@ -60,8 +64,14 @@ def run(side, cwd, workload, seed, seconds):
         log(f"{side} seed {seed}: run.py exited {p.returncode}\n{p.stderr[-2000:]}")
         return None
     res = json.loads(lines[-1])
+    report = os.path.join(cwd, ".bench_build", "perfbench", "results",
+                          f"{workload}-seed{seed}-trace0.json")
+    with open(report) as fh:
+        calib = json.load(fh)["context"]["calib_mhps_per_thread"]
+    res["calib"] = (calib["pre"] + calib["post"]) / 2
     log(f"{side} seed {seed}: correct={res['correct']} failed={res['failed']} " +
-        " ".join(f"{k}={v['value']}" for k, v in res["metrics"].items()))
+        " ".join(f"{k}={v['value']}" for k, v in res["metrics"].items()) +
+        f" calib={res['calib']:.3g}")
     return res
 
 
@@ -110,7 +120,7 @@ def main():
     def cell(q):
         return f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]"
     print(f"{'metric':14s} {'parent med [q1, q3]':26s} {'change med [q1, q3]':26s} "
-          f"{'delta':>7s} {'wins':>7s} {'all beat':>8s} {'gain rule':>9s} {'bound':>10s}")
+          f"{'delta':>7s} {'norm':>7s} {'wins':>7s} {'all beat':>8s} {'gain rule':>9s} {'bound':>10s}")
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         ps = [p["metrics"][name]["value"] for p, _ in pairs]
@@ -122,6 +132,12 @@ def main():
         wins = sum(1 for p, c in zip(ps, cs) if (c < p if lower else c > p))
         all_beat = max(cs) < min(ps) if lower else min(cs) > max(ps)
         delta = (cq[1] - pq[1]) / pq[1] if pq[1] else 0.0
+        if m["unit"] in ("s", "ms"):
+            pn = statistics.median(p["metrics"][name]["value"] * p["calib"] for p, _ in pairs)
+            cn = statistics.median(c["metrics"][name]["value"] * c["calib"] for _, c in pairs)
+            norm = f"{(cn - pn) / pn * 100:+6.1f}%" if pn else "-"
+        else:
+            norm = "-"
         worse = delta if lower else -delta
         rule = wins * 10 >= 9 * len(pairs) and -worse * pq[1] > pq[2] - pq[0]
         spread = (pq[2] - pq[0]) / pq[1] if pq[1] else 0.0
@@ -131,7 +147,7 @@ def main():
             bound = "unresolved"
         else:
             bound = "ok"
-        print(f"{name:14s} {cell(pq):26s} {cell(cq):26s} {delta * 100:+6.1f}% "
+        print(f"{name:14s} {cell(pq):26s} {cell(cq):26s} {delta * 100:+6.1f}% {norm:>7s} "
               f"{wins:3d}/{len(pairs):<3d} {'yes' if all_beat else 'no':>8s} "
               f"{'holds' if rule else 'no':>9s} {bound:>10s}")
     if bad:

@@ -1,5 +1,6 @@
 package graft
 
+import graft.lake.{NoForkLocalFileSystem, NoForkLocalFs}
 import org.apache.spark.sql.SparkSession
 
 /** Session factory with the engine's scale-oriented defaults: AQE on
@@ -59,6 +60,12 @@ object Sessions {
       // nearly every real batch to a full sort. Buffers are one payload row
       // per live key per task — bounded, so a high threshold is safe.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
+      // file: through java.nio instead of a forked chmod per created file
+      // and directory and readlinks per checkpoint rename (graft.lake.
+      // NoForkLocalFs). Hadoop caches the file: FileSystem once per JVM,
+      // so these must reach its first use: every engine session is built here.
+      .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NoForkLocalFs].getName)
     // Shuffle/spill dir: this sandbox's root disk serializes concurrent
     // writers (measured: wide-row shuffles ANTI-scaled 8→32 threads until
     // moved to tmpfs). A real cluster puts spark.local.dir on NVMe; here

@@ -1191,7 +1191,8 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
     // ranges, which is what makes the manifest bounds prune to one file
     maxRowsPerFile.foreach(n => w.option("maxRecordsPerFile", n))
     w.parquet(s"$root/$outDir")
-    listDataFiles(Paths.get(root, outDir), outDir).map(_.copy(sorted = sorted))
+    listDataFiles(Paths.get(root, outDir), outDir, rows.sparkSession.sparkContext.hadoopConfiguration)
+      .map(_.copy(sorted = sorted))
   }
 
   /** Generic SQL `MERGE INTO` executor (the graft_lake SQL surface,
@@ -1697,11 +1698,11 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
   }
 
   /** Scan freshly-written snapshot files, reading row counts from parquet
-    * footers (no extra Spark job).
+    * footers (no extra Spark job) through the writing session's filesystem.
     */
-  private def listDataFiles(dir: Path, rel: String): Seq[DataFile] = {
+  private def listDataFiles(dir: Path, rel: String,
+                            conf: org.apache.hadoop.conf.Configuration): Seq[DataFile] = {
     if (!Files.exists(dir)) return Nil
-    val conf = new org.apache.hadoop.conf.Configuration()
     val paths = scala.util.Using.resource(Files.walk(dir)) { stream =>
       stream.iterator.asScala
         .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p)).toSeq
