@@ -15,7 +15,7 @@ echo "=== gen 8M events, 128 files ==="
 GRAFT_CORES=32 java $JAVA_OPTS -Xmx16g -cp "$CP" graft.tools.ReplayCli gen $S/log 8000000 42 128 2>&1 | grep -v "^2[0-9]" | tail -1
 
 echo "=== replay 32c mor, 8 batches, no inline compaction ==="
-GRAFT_MAX_FILES_PER_TRIGGER=16 java $JAVA_OPTS -Xmx16g -cp "$CP" graft.tools.ReplayCli replay $S/log $S/work 32 16 64 mor 2>&1 | grep -v "^2[0-9]" | tail -1
+GRAFT_MAX_FILES_PER_TRIGGER=16 java $JAVA_OPTS -Xmx16g -cp "$CP" graft.tools.ReplayCli replay $S/log $S/work 32 64 mor 2>&1 | grep -v "^2[0-9]" | tail -1
 
 cp -r $S/work $S/work_wave
 

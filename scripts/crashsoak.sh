@@ -18,7 +18,7 @@ echo "=== gen ${N} events, 16 files (multi-batch via maxFilesPerTrigger=2 -> 8 b
 GRAFT_CORES=32 java $JAVA_OPTS -Xmx16g -cp "$CP" graft.tools.ReplayCli gen $S/log $N 42 16 2>&1 | grep -a "\[gen\]"
 
 echo "=== reference: clean uninterrupted replay ==="
-GRAFT_MAX_FILES_PER_TRIGGER=2 java $JAVA_OPTS -Xmx16g -cp "$CP" graft.tools.ReplayCli replay $S/log $S/ref 16 16 32 $MODE 2>&1 | grep -a "\[replay\]"
+GRAFT_MAX_FILES_PER_TRIGGER=2 java $JAVA_OPTS -Xmx16g -cp "$CP" graft.tools.ReplayCli replay $S/log $S/ref 16 32 $MODE 2>&1 | grep -a "\[replay\]"
 REF=$(java $JAVA_OPTS -Xmx16g -cp "$CP" graft.tools.ReplayCli sql $S/ref "$HASH_SQL" 2>/dev/null | grep -a "^|" | tail -1)
 echo "ref state: $REF"
 
@@ -27,13 +27,13 @@ for i in $(seq 1 $ITERS); do
   # kill at a random point inside the replay (3..25s in — mid-batch,
   # mid-commit, mid-compaction; whatever the dice land on)
   DELAY=$((RANDOM % 23 + 3))
-  GRAFT_MAX_FILES_PER_TRIGGER=2 java $JAVA_OPTS -Xmx16g -cp "$CP" graft.tools.ReplayCli replay $S/log $W 16 16 32 $MODE > $W.log1 2>&1 &
+  GRAFT_MAX_FILES_PER_TRIGGER=2 java $JAVA_OPTS -Xmx16g -cp "$CP" graft.tools.ReplayCli replay $S/log $W 16 32 $MODE > $W.log1 2>&1 &
   PID=$!
   sleep $DELAY
   if kill -9 $PID 2>/dev/null; then KILLED="killed at ${DELAY}s"; else KILLED="finished before ${DELAY}s"; fi
   wait $PID 2>/dev/null || true
   # restart: must resume from the checkpoint and finish exactly-once
-  GRAFT_MAX_FILES_PER_TRIGGER=2 java $JAVA_OPTS -Xmx16g -cp "$CP" graft.tools.ReplayCli replay $S/log $W 16 16 32 $MODE > $W.log2 2>&1
+  GRAFT_MAX_FILES_PER_TRIGGER=2 java $JAVA_OPTS -Xmx16g -cp "$CP" graft.tools.ReplayCli replay $S/log $W 16 32 $MODE > $W.log2 2>&1
   GOT=$(java $JAVA_OPTS -Xmx16g -cp "$CP" graft.tools.ReplayCli sql $W "$HASH_SQL" 2>/dev/null | grep -a "^|" | tail -1)
   if [ "$GOT" == "$REF" ]; then VERDICT="PARITY"; else VERDICT="MISMATCH got=$GOT"; fi
   echo "iter $i: $KILLED -> recovered: $VERDICT $(grep -a '\[replay\]' $W.log2 | tail -c 120)"

@@ -18,7 +18,7 @@ hashOf() { java $JAVA_OPTS -Xmx16g -cp "$CP" graft.tools.ReplayCli sql "$1" "$HA
 
 echo "=== gen ${N} events, 16 files; replay as 8 versions (primary) ==="
 GRAFT_CORES=32 java $JAVA_OPTS -Xmx16g -cp "$CP" graft.tools.ReplayCli gen $S/log $N 42 16 2>&1 | grep -a "\[gen\]"
-GRAFT_MAX_FILES_PER_TRIGGER=2 java $JAVA_OPTS -Xmx16g -cp "$CP" graft.tools.ReplayCli replay $S/log $S/primary 16 16 32 cow 2>&1 | grep -a "\[replay\]"
+GRAFT_MAX_FILES_PER_TRIGGER=2 java $JAVA_OPTS -Xmx16g -cp "$CP" graft.tools.ReplayCli replay $S/log $S/primary 16 32 cow 2>&1 | grep -a "\[replay\]"
 PRI=$(hashOf $S/primary)
 echo "primary state: $PRI"
 

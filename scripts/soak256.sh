@@ -13,7 +13,7 @@ echo "=== gen 256M events, 1024 files ==="
 GRAFT_CORES=32 java $JAVA_OPTS -Xmx24g -cp "$CP" graft.tools.ReplayCli gen $S/log 256000000 42 1024 2>&1 | grep -v "^2[0-9]" | tail -2
 
 echo "=== replay 32c mor compactEvery=4 targetFileRows=500000 (8 batches) ==="
-GRAFT_MAX_FILES_PER_TRIGGER=128 java $JAVA_OPTS -Xmx24g -cp "$CP" graft.tools.ReplayCli replay $S/log $S/work 32 16 64 mor 4 500000 2>&1 | grep -v "^2[0-9]" | tail -3
+GRAFT_MAX_FILES_PER_TRIGGER=128 java $JAVA_OPTS -Xmx24g -cp "$CP" graft.tools.ReplayCli replay $S/log $S/work 32 64 mor 4 500000 2>&1 | grep -v "^2[0-9]" | tail -3
 
 echo "=== standalone sorted compaction (inline cadence compaction is threshold-based: maxFilesPerBucket=4) ==="
 java $JAVA_OPTS -Xmx24g -cp "$CP" graft.tools.ReplayCli compact $S/work 500000 2>&1 | grep -v "^2[0-9]" | tail -2
@@ -28,7 +28,7 @@ echo "=== full-state hash (32c table) ==="
 java $JAVA_OPTS -Xmx24g -cp "$CP" graft.tools.ReplayCli sql $S/work "SELECT count(*) AS n, sum(hash(repo, path, seq, commit, language, content, size_bytes)) AS state_hash FROM \$TABLE" 2>&1 | grep -v "^2[0-9]" | tail -5
 
 echo "=== invariance replay 8c compactEvery=2 (same log) ==="
-GRAFT_MAX_FILES_PER_TRIGGER=128 java $JAVA_OPTS -Xmx24g -cp "$CP" graft.tools.ReplayCli replay $S/log $S/work8 8 16 64 mor 2 500000 2>&1 | grep -v "^2[0-9]" | tail -3
+GRAFT_MAX_FILES_PER_TRIGGER=128 java $JAVA_OPTS -Xmx24g -cp "$CP" graft.tools.ReplayCli replay $S/log $S/work8 8 64 mor 2 500000 2>&1 | grep -v "^2[0-9]" | tail -3
 
 echo "=== full-state hash (8c table) ==="
 java $JAVA_OPTS -Xmx24g -cp "$CP" graft.tools.ReplayCli sql $S/work8 "SELECT count(*) AS n, sum(hash(repo, path, seq, commit, language, content, size_bytes)) AS state_hash FROM \$TABLE" 2>&1 | grep -v "^2[0-9]" | tail -5

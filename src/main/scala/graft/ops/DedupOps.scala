@@ -144,12 +144,6 @@ object DedupOps {
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
 
-  // measurement-only aliases for the r6 phase probe (D2Probe)
-  private[ops] def probePostings(df: DataFrame, idCol: String, textCol: String, n: Int) =
-    postings(df, idCol, textCol, n)
-  private[ops] def probeVerify(cand: DataFrame, sets: DataFrame, t: Double) =
-    verifyJaccard(cand, sets, t)
-
   /** Exact n-gram Jaccard ≥ threshold pairs (id_a < id_b), via inverted
     * index: group postings by shingle, emit co-occurring pairs, count
     * intersections, compute |A∩B| / (|A|+|B|-|A∩B|).

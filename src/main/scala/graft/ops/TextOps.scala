@@ -131,14 +131,4 @@ object TextOps {
       least(alphaRatio, lit(1.0)) * lit(0.25) +
       least(distinctRatio * lit(2.0), lit(1.0)) * lit(0.25), 4)
   }
-
-  /** Convenience: annotate a documents frame with all text metrics. */
-  def annotate(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    df.withColumn("n_tokens", tokenCount(t))
-      .withColumn("n_subwords", subwordCount(t))
-      .withColumn("fingerprint", fingerprint(t))
-      .withColumn("lang_pred", langId(t))
-      .withColumn("quality", qualityScore(t))
-  }
 }

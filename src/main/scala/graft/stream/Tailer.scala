@@ -39,15 +39,10 @@ object Tailer {
       lineageDir: String,
       metricsDir: String,
       numBuckets: Int = 32,
+      /** Ignored: LWW does not salt. Kept only because the frozen
+        * `SparkEntry.entry` and the catalog's CDC-replay query pass it by
+        * name. */
       saltBuckets: Int = 16,
-      // MEASURED ANTI-SCALING (r5 multi_jvm_cluster_probe): the salted
-      // two-phase LWW went 35.6s → 61.5s scaling 2→8 executors while the
-      // unsalted path scaled normally — its extra exchange costs more than
-      // map-side combine saves at every skew the generator produces (zipf
-      // s=1.2). Leave false unless a heavy-hitter probe (ops.FreqOps MgAgg)
-      // shows a single key above ~5% of a batch AND the cluster is large
-      // enough that one reducer's fan-in is the straggler.
-      useSalt: Boolean = false,
       tableMode: String = graft.lake.LakeTable.Cow,
       compactEvery: Option[Int] = None, // auto-compact after every N applied batches
       targetFileRows: Option[Long] = None, // sorted size-split compaction output
@@ -222,20 +217,14 @@ object Tailer {
     // gathered on the scan that reads the payloads anyway
     val tap = new LineageTap(rawCols)
     val keys = Seq("repo", "path")
-    // Default path: adaptive two-pass broadcast LWW — winners are found on
-    // the narrow (key, seq) columns and payloads never shuffle (guide
-    // §2.3); batches whose winner set is too large to broadcast fall back
-    // to the single-pass hash-agg inside lwwBroadcast. The cap bounds the
-    // driver's share of the broadcast (sizing: Dedupe.lwwBroadcast).
-    // Salting (opt-in) adds a second exchange; with map-side combine
-    // bounding per-key reducer fan-in at #map-tasks it only pays off at
-    // extreme skew × very large clusters, and it keeps an emptiness probe.
-    val maxKeys = scala.util.Try(spark.conf.get(
-      "spark.graft.lww.broadcastMaxKeys").toLong).getOrElse(1000000L)
-    val dedupedRaw =
-      if (!cfg.useSalt) Dedupe.lwwBroadcastOrEmpty(rawCols, keys, "seq", maxKeys, tap.frame)
-      else if (raw.isEmpty) None
-      else Some(Dedupe.lwwTypedSalted(tap.frame, keys, "seq", cfg.saltBuckets))
+    // Adaptive two-pass broadcast LWW — winners are found on the narrow
+    // (key, seq) columns and payloads never shuffle (guide §2.3); batches
+    // whose winner set is too large to broadcast fall back to the
+    // single-pass hash-agg inside lwwBroadcast. The cap keeps the
+    // broadcast's estimated driver footprint at or below 1/8 of the heap
+    // (sizing: Dedupe.lwwBroadcast).
+    val maxKeys = math.min(1000000L, Runtime.getRuntime.maxMemory / 4096)
+    val dedupedRaw = Dedupe.lwwBroadcastOrEmpty(rawCols, keys, "seq", maxKeys, tap.frame)
     if (dedupedRaw.isEmpty) return
     val deduped = Normalize(dedupedRaw.get).select(mergeCols.map(col): _*)
 

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *
   * {{{
   * ReplayCli gen    <logDir> <nEvents> [seed] [nFiles]
-  * ReplayCli replay <logDir> <workDir> [cores] [saltBuckets] [numBuckets] [mode] [compactEvery] [targetFileRows]
+  * ReplayCli replay <logDir> <workDir> [cores] [numBuckets] [mode] [compactEvery] [targetFileRows]
   * ReplayCli show    <workDir> [repo path]
   * ReplayCli stats   <workDir>
   * ReplayCli sql     <workDir> "SELECT … FROM $TABLE …"
@@ -41,17 +41,16 @@ object ReplayCli {
     case "replay" :: logDir :: workDir :: rest =>
       val cores = rest.headOption.map(_.toInt)
         .getOrElse(sys.env.getOrElse("GRAFT_CORES", "8").toInt)
-      val salt = rest.drop(1).headOption.map(_.toInt).getOrElse(16)
-      val buckets = rest.drop(2).headOption.map(_.toInt).getOrElse(32)
-      val mode = rest.drop(3).headOption.getOrElse(
+      val buckets = rest.drop(1).headOption.map(_.toInt).getOrElse(32)
+      val mode = rest.drop(2).headOption.getOrElse(
         sys.env.getOrElse("GRAFT_TABLE_MODE", graft.lake.LakeTable.Cow))
-      val compactEvery = rest.drop(4).headOption.map(_.toInt).filter(_ > 0)
+      val compactEvery = rest.drop(3).headOption.map(_.toInt).filter(_ > 0)
       // 0/negative would silently mean "no limit" downstream
       // (maxRecordsPerFile) — reject, same policy as compact's arg
-      val targetRows = rest.drop(5).headOption.map { a =>
+      val targetRows = rest.drop(4).headOption.map { a =>
         a.toLongOption.filter(_ > 0).getOrElse {
           System.err.println(
-            s"usage: ReplayCli replay <logDir> <workDir> [cores salt buckets mode compactEvery targetFileRows>0]; got '$a'")
+            s"usage: ReplayCli replay <logDir> <workDir> [cores buckets mode compactEvery targetFileRows>0]; got '$a'")
           sys.exit(2)
         }
       }
@@ -60,7 +59,7 @@ object ReplayCli {
       val cfg = TailerConfig(
         logDir = logDir, tableRoot = s"$workDir/table",
         checkpointDir = s"$workDir/ckpt", lineageDir = s"$workDir/lineage",
-        metricsDir = s"$workDir/metrics", numBuckets = buckets, saltBuckets = salt,
+        metricsDir = s"$workDir/metrics", numBuckets = buckets,
         tableMode = mode, compactEvery = compactEvery,
         targetFileRows = targetRows, maxFilesPerTrigger = maxFiles)
       val t0 = System.nanoTime()

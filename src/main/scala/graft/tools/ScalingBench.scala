@@ -52,7 +52,7 @@ object ScalingBench {
     val cfg = TailerConfig(
       logDir = logDir, tableRoot = s"$work/table",
       checkpointDir = s"$work/ckpt", lineageDir = s"$work/lineage",
-      metricsDir = s"$work/metrics", numBuckets = 64, saltBuckets = 16)
+      metricsDir = s"$work/metrics", numBuckets = 64)
     val t0 = System.nanoTime()
     Tailer.replay(spark, cfg)
     val secs = (System.nanoTime() - t0) / 1e9

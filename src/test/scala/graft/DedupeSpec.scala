@@ -6,9 +6,9 @@ import graft.gen.ChangeLogGen
 import graft.gen.ChangeLogGen.GenConfig
 import graft.model.Model._
 import org.apache.spark.sql.functions._
-/** Property tests for the LWW core (SURVEY §5.2): every dedupe
-  * implementation — the production `lwwBroadcast` on both sides of its
-  * broadcast cap included — agrees with the others and with a HashMap
+/** Property tests for the LWW core (SURVEY §5.2): the production
+  * `lwwBroadcast` on both sides of its broadcast cap (the fallback
+  * `lwwTyped` above it) agrees with the `lww` reference and with a HashMap
   * fold, at any parallelism, and is idempotent under log duplication. (Properties run
   * as seeded multi-trial loops: the offline cache has no scalatestplus
   * bridge, so generators are hand-rolled and fully deterministic.)
@@ -37,24 +37,10 @@ class DedupeSpec extends SparkSpec {
   test("every LWW implementation agrees on a generated log") {
     val a = lwwKeys(Dedupe.lww(normalized, Seq("repo", "path"), "seq"))
     assert(a.nonEmpty)
-    assert(a === lwwKeys(Dedupe.lwwSalted(normalized, Seq("repo", "path"), "seq", 8)))
-    assert(a === lwwKeys(Dedupe.lwwWindow(normalized, Seq("repo", "path"), "seq")))
     assert(a === lwwKeys(Dedupe.lwwTyped(normalized, Seq("repo", "path"), "seq")))
-    assert(a === lwwKeys(Dedupe.lwwTypedSalted(normalized, Seq("repo", "path"), "seq", 8)))
-    assert(a === lwwKeys(Dedupe.lwwJoin(normalized, Seq("repo", "path"), "seq")))
     broadcastCaps.foreach { cap =>
       assert(a === lwwKeys(Dedupe.lwwBroadcast(normalized, keys, "seq", cap)), s"maxKeys $cap")
     }
-  }
-
-  test("lwwJoin collapses re-delivered identical (key, max-seq) rows to one row per key") {
-    // a re-delivered idempotent write duplicates the winning (key, seq)
-    // pair — the join-back would keep both copies without the collapse
-    val df = Seq(("r1", "p1", 5L, "v5"), ("r1", "p1", 5L, "v5"), ("r1", "p1", 3L, "v3"))
-      .toDF("repo", "path", "seq", "content")
-    val out = Dedupe.lwwJoin(df, Seq("repo", "path"), "seq")
-    assert(out.count() === 1L, "one row per key, even with a duplicated winner")
-    assert(out.select("seq", "content").as[(Long, String)].head() === ((5L, "v5")))
   }
 
   test("every variant resolves payload/key columns with dots in the name literally") {
@@ -62,8 +48,7 @@ class DedupeSpec extends SparkSpec {
       .toDF("id", "seq", "meta.size")
     type Lww = (org.apache.spark.sql.DataFrame, Seq[String], String) => org.apache.spark.sql.DataFrame
     val fns: Seq[Lww] =
-      Seq[Lww](Dedupe.lww, Dedupe.lwwTyped, Dedupe.lwwJoin, Dedupe.lwwWindow,
-        Dedupe.lwwSalted(_, _, _, 4), Dedupe.lwwTypedSalted(_, _, _, 4)) ++
+      Seq[Lww](Dedupe.lww, Dedupe.lwwTyped) ++
         broadcastCaps.map[Lww](cap => Dedupe.lwwBroadcast(_, _, _, cap))
     fns.foreach { f =>
       val out = f(df, Seq("id"), "seq")
@@ -137,7 +122,7 @@ class DedupeSpec extends SparkSpec {
           val k = (r, p)
           if (m.get(k).forall(_._1 < s)) m.updated(k, (s, c)) else m
       }
-      assert(resolved(Dedupe.lwwSalted(df, keys, "seq", 4)) === oracle, s"trial $trial")
+      assert(resolved(Dedupe.lww(df, keys, "seq")) === oracle, s"trial $trial")
       broadcastCaps.foreach { cap =>
         assert(resolved(Dedupe.lwwBroadcast(df, keys, "seq", cap)) === oracle,
           s"trial $trial, lwwBroadcast maxKeys $cap")
@@ -146,17 +131,21 @@ class DedupeSpec extends SparkSpec {
   }
 
   test("property: lwwBroadcast output is independent of maxKeys when keys have all-null seqs") {
-    // a key whose every seq is null has no winner: the broadcast join-back
-    // and the lwwTyped fallback must both drop it, so crossing the cap
+    // a key whose every seq is null has no winner, and a key with a null
+    // repo or path can never match the join-back: the broadcast path and
+    // the lwwTyped fallback must both drop them, so crossing the cap
     // (batch size) never changes which keys a batch carries
     (1 to 10).foreach { trial =>
       val rnd = new scala.util.Random(trial * 104729L)
       val n = 40 + rnd.nextInt(200)
       val rows = (0 until n).map { i =>
-        val k = rnd.nextInt(30)
-        // keys 0-9 only ever carry null seqs, 10-19 carry a mix
+        val k = rnd.nextInt(40)
+        // keys 0-9 only ever carry null seqs, 10-19 carry a mix,
+        // 30-34 have a null repo and 35-39 a null path
         val seq = if (k < 10 || (k < 20 && rnd.nextBoolean())) None else Some(i.toLong)
-        (s"r${k % 4}", s"p$k", seq, rnd.alphanumeric.take(6).mkString)
+        val repo = if (k >= 30 && k < 35) null else s"r${k % 4}"
+        val path = if (k >= 35) null else s"p$k"
+        (repo, path, seq, rnd.alphanumeric.take(6).mkString)
       }
       val df = rows.toDF("repo", "path", "seq", "content")
       def resolved(out: org.apache.spark.sql.DataFrame) = out
@@ -165,12 +154,11 @@ class DedupeSpec extends SparkSpec {
       def out(cap: Long) = resolved(Dedupe.lwwBroadcast(df, keys, "seq", cap))
       val below = out(1000000L)
       assert(out(0L) === below, s"trial $trial: maxKeys changed the output")
-      assert(resolved(Dedupe.lwwTypedSalted(df, keys, "seq", 4)) === below,
-        s"trial $trial: the salted path agrees")
-      val oracle = rows.collect { case (r, p, Some(s), c) => (r, p, s, c) }
+      val oracle = rows.collect { case (r, p, Some(s), c) if r != null && p != null => (r, p, s, c) }
         .groupBy(x => (x._1, x._2)).values.map(_.maxBy(_._3))
         .map { case (r, p, s, c) => (r, p, Option(s), c) }.toSet
-      assert(below === oracle, s"trial $trial: all-null-seq keys dropped, others keep max seq")
+      assert(below === oracle,
+        s"trial $trial: all-null-seq and null-key rows dropped, others keep max seq")
     }
   }
 

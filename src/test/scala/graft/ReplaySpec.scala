@@ -24,7 +24,7 @@ class ReplaySpec extends SparkSpec {
     (TailerConfig(
       logDir = logDir, tableRoot = s"$base/table",
       checkpointDir = s"$base/ckpt", lineageDir = s"$base/lineage",
-      metricsDir = s"$base/metrics", numBuckets = 16, saltBuckets = 8), base)
+      metricsDir = s"$base/metrics", numBuckets = 16), base)
   }
 
   private lazy val logDir: String = {
