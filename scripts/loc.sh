@@ -15,3 +15,4 @@ count() { # total code lines of the .scala files under $1 (a dir or a file)
 printf '%-40s %6s\n' "src/main"                          "$(count src/main)"
 printf '%-40s %6s\n' "src/main/scala/graft/tools"        "$(count src/main/scala/graft/tools)"
 printf '%-40s %6s\n' "src/main/scala/graft/lake/LakeTable.scala" "$(count src/main/scala/graft/lake/LakeTable.scala)"
+printf '%-40s %6s\n' "src/main/scala/graft/stream"       "$(count src/main/scala/graft/stream)"

@@ -1024,6 +1024,14 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
     *    (recombining the touched-bucket manifests against the new head) —
     *    unless a vacuum reclaimed the pending files, which recomputes;
     *  - both stop, not applied, when the new head carries our batchId.
+    *
+    * A batch with no source rows commits nothing and does not advance the
+    * fence: COW learns it from its touched-bucket count, MOR from a data
+    * write that produced no file. Callers read emptiness from the
+    * result (`applied = false` on an unfenced batch) instead of probing
+    * the batch first. An empty MOR write may leave an output directory
+    * behind; no manifest references it, so [[vacuum]] reclaims it as it
+    * reclaims commit losers' files.
     */
   def merge(spark: SparkSession, batch: DataFrame, batchId: Long,
             updateColumns: Option[Seq[String]], retries: Int,
@@ -1056,7 +1064,7 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
         MergeStats(applied = true, s.version, srcRows, touched.size, s.totalRows)
       def fenced(v: (Snapshot, Snapshot) => Verdict[Nothing])(base: Snapshot, head: Snapshot) =
         if (batchId <= head.lastBatchId) AlreadyApplied(notApplied(head)) else v(base, head)
-      if (mor) commitLoop(h0, retries) { _ =>
+      if (mor) commitLoop(h0, retries) { h =>
         // MOR append: O(batch) writes; touched buckets get a REWRITTEN
         // manifest (old files + appended files) on each base. The files
         // written carry their bucket and footer row count, so they give
@@ -1064,7 +1072,8 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
         val newFiles = writeSnapshotFiles(appendRows(src), newToken())
         val touched = newFiles.map(_.bucket).toSet
         val srcRows = newFiles.map(_.rowCount).sum
-        Right(Pending(base => nextSnapshot(base, touched,
+        if (newFiles.isEmpty) Left(notApplied(h))
+        else Right(Pending(base => nextSnapshot(base, touched,
             writeManifests(newToken(), newFiles ++ loadAll(base.manifests.filter(r => touched(r.bucket)))),
             summary(srcRows, touched), Some(batchId)),
           applied(srcRows, touched), fenced((_, _) =>
@@ -1074,6 +1083,7 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
         // one job yields both the touched-bucket set and the source row
         // count, which COW needs before it reads the target buckets
         val counts = bucketCounts(src)
+        if (counts.isEmpty) return notApplied(h0)
         val touched = counts.keySet
         val srcRows = counts.values.sum
         commitLoop(h0, retries) { h =>

@@ -120,15 +120,4 @@ object SchemaRegistry {
   val epochs: Seq[Epoch] = Seq(epoch0, epoch1, epoch2)
   val byId: Map[Int, Epoch] = epochs.map(e => e.schemaId -> e).toMap
   val latest: Epoch = epochs.last
-
-  /** Latest-reader name for a permanent field id. */
-  val latestNameById: Map[Int, String] =
-    latest.fields.map(f => f.id -> f.name).toMap
-
-  /** For an epoch, the rename map old-name → latest-name (identity when
-    * unchanged). Used by the normalizer to project any historical payload
-    * into the latest schema.
-    */
-  def renameToLatest(e: Epoch): Seq[(String, String)] =
-    e.fields.map(f => f.name -> latestNameById(f.id))
 }

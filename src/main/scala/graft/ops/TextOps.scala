@@ -27,12 +27,6 @@ object TextOps {
   def fingerprint(text: Column): Column =
     sha2(regexp_replace(lower(trim(text)), "\\s+", " "), 256)
 
-  /** 64-bit rolling-style fingerprint (xxhash of normalized text) for
-    * cheap bucketing where 256 bits are overkill.
-    */
-  def fingerprint64(text: Column): Column =
-    xxhash64(regexp_replace(lower(trim(text)), "\\s+", " "))
-
   /** Shingle array over a PRE-SPLIT words column — THE one definition of
     * word n-grams (DedupOps and the DuckDB oracles mirror it; `<n` words
     * fall back to a single whole-text shingle). Callers should project the

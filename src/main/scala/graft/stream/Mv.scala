@@ -2,6 +2,8 @@ package graft.stream
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -43,13 +45,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * absorbed. Old versions beyond `retain` are deleted after the pointer
   * advances.
   *
-  * Scale: per batch this shuffles the FEED (group-by) and rewrites the
-  * VIEW (O(distinct groups), e.g. |languages| — the classic MV-over-CDF
-  * pattern, same as a Delta MERGE-maintained view). The feed itself is the
-  * O(changed-buckets) CDF scan; the primary is never re-read. For a view
-  * with billions of groups the rewrite would graduate to a keyed MERGE
-  * sink; for report-shaped groupings the single small parquet write IS the
-  * right plan at any primary size.
+  * Scale: per batch ONE pass reads the feed — the O(changed-buckets) CDF
+  * scan; the primary is never re-read — and groups it into per-group
+  * count/byte deltas, which it collects to the driver: O(distinct groups)
+  * rows, e.g. |languages|, the same rows the view rewrite funnels through
+  * one task. The op guard and the empty-window check read those rows; the
+  * fold joins them to the previous version and rewrites the VIEW in a
+  * second job (the classic MV-over-CDF pattern, same as a Delta
+  * MERGE-maintained view). For a view with billions of groups the deltas
+  * would stay distributed and the rewrite would graduate to a keyed MERGE
+  * sink; for report-shaped groupings the collected deltas and the single
+  * small parquet write ARE the right plan at any primary size.
   */
 object Mv {
 
@@ -203,38 +209,39 @@ object Mv {
         sum(sign).as("_dcnt"),
         sum(sign * coalesce(col("size_bytes"), lit(0L))).as("_dbytes"),
         sum(when(sign.isNull, 1L).otherwise(0L)).as("_bad"))
-      .persist()
-    try {
-      val bad = deltas.agg(coalesce(sum("_bad"), lit(0L))).head.getLong(0)
-      if (bad > 0)
-        throw new IllegalStateException(
-          s"mv: $bad feed row(s) with an op outside I/U-/U+/D — the feed " +
-            "must be read with updatePreimages=true for aggregate maintenance")
-      if (deltas.isEmpty && prev.isDefined) return // compaction-only window
+    // O(groups) rows — the same rows the coalesce(1) view write below
+    // funnels through one task — so the guard and the emptiness check run
+    // on the driver, and the feed is read by this one pass only
+    val rows = deltas.collect().toSeq
+    val bad = rows.map(_.getAs[Long]("_bad")).sum
+    if (bad > 0)
+      throw new IllegalStateException(
+        s"mv: $bad feed row(s) with an op outside I/U-/U+/D — the feed " +
+          "must be read with updatePreimages=true for aggregate maintenance")
+    if (rows.isEmpty && prev.isDefined) return // compaction-only window
+    val d = spark.createDataFrame(rows.asJava, deltas.schema)
 
-      val folded = prev match {
-        case None =>
-          deltas.select(col(groupCol), col("_dcnt").as("cnt"),
-            col("_dbytes").as("bytes"))
-        case Some(v) =>
-          val old = spark.read.parquet(s"$viewDir/v$v")
-          // null-safe group join: a null group key is one group, not a
-          // join miss that would duplicate it on every batch
-          old.as("o").join(deltas.as("d"),
-              col(s"o.$groupCol") <=> col(s"d.$groupCol"), "full_outer")
-            .select(
-              coalesce(col(s"o.$groupCol"), col(s"d.$groupCol")).as(groupCol),
-              (coalesce(col("o.cnt"), lit(0L)) +
-                coalesce(col("d._dcnt"), lit(0L))).as("cnt"),
-              (coalesce(col("o.bytes"), lit(0L)) +
-                coalesce(col("d._dbytes"), lit(0L))).as("bytes"))
-      }
-      folded.filter(col("cnt") > 0) // emptied groups leave the view
-        .coalesce(1) // report-shaped: O(groups) rows
-        .write.mode("overwrite").parquet(s"$viewDir/v$batchId")
-      advancePointer(dir, batchId)
-      gc(dir, batchId, retain)
-    } finally deltas.unpersist()
+    val folded = prev match {
+      case None =>
+        d.select(col(groupCol), col("_dcnt").as("cnt"), col("_dbytes").as("bytes"))
+      case Some(v) =>
+        val old = spark.read.parquet(s"$viewDir/v$v")
+        // null-safe group join: a null group key is one group, not a
+        // join miss that would duplicate it on every batch
+        old.as("o").join(d.as("d"),
+            col(s"o.$groupCol") <=> col(s"d.$groupCol"), "full_outer")
+          .select(
+            coalesce(col(s"o.$groupCol"), col(s"d.$groupCol")).as(groupCol),
+            (coalesce(col("o.cnt"), lit(0L)) +
+              coalesce(col("d._dcnt"), lit(0L))).as("cnt"),
+            (coalesce(col("o.bytes"), lit(0L)) +
+              coalesce(col("d._dbytes"), lit(0L))).as("bytes"))
+    }
+    folded.filter(col("cnt") > 0) // emptied groups leave the view
+      .coalesce(1) // report-shaped: O(groups) rows
+      .write.mode("overwrite").parquet(s"$viewDir/v$batchId")
+    advancePointer(dir, batchId)
+    gc(dir, batchId, retain)
   }
 
   /** First apply records the consumer (checkpoint) identity; later applies

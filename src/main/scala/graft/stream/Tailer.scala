@@ -123,7 +123,8 @@ object Tailer {
     StructField("attempt", LongType, nullable = false)))
 
   /** Per-partition lineage stats of one input partition: seq range seen
-    * (first > last when no row had a seq), rows, payload characters.
+    * (first > last when no row had a seq), rows, characters of the bytes
+    * column.
     */
   private final case class PartLineage(first: Long, last: Long, rows: Long, bytes: Long) {
     def toRow(partitionId: Int): Row = Row(partitionId,
@@ -135,16 +136,19 @@ object Tailer {
     * rows unchanged; every task that drains one of its partitions reports
     * that partition's [[PartLineage]] through an accumulator, keyed by
     * partition id, so a retried or re-executed task replaces its entry
-    * instead of adding to it. Nothing is registered beyond the
-    * accumulator, which the context cleaner reclaims with the tap, so a
-    * tap that never runs (fenced batch) leaves nothing behind.
+    * instead of adding to it. An empty partition reports too, so a drained
+    * empty batch is told apart from one nothing read. Nothing is
+    * registered beyond the accumulator, which the context cleaner reclaims
+    * with the tap, so a tap that never runs (fenced batch) leaves nothing
+    * behind. `bytesCol` is the column whose characters count as `bytesIn`:
+    * `payload` for the change log, `content` for a change feed.
     */
-  private final class LineageTap(raw: DataFrame) {
+  private final class LineageTap(raw: DataFrame, val bytesCol: String) {
     private val acc = new CollectionAccumulator[(Int, PartLineage)]
     raw.sparkSession.sparkContext.register(acc)
     val frame: DataFrame = {
       val seqAt = raw.schema.fieldIndex("seq")
-      val payloadAt = raw.schema.fieldIndex("payload")
+      val bytesAt = raw.schema.fieldIndex(bytesCol)
       val out = acc
       ColumnBridge.mapInternal(raw)(_.mapPartitionsWithIndex { (pid, it) =>
         new Iterator[InternalRow] {
@@ -156,7 +160,7 @@ object Tailer {
             val more = it.hasNext
             if (!more && !reported) {
               reported = true
-              if (rows > 0) out.add(pid -> PartLineage(first, last, rows, bytes))
+              out.add(pid -> PartLineage(first, last, rows, bytes))
             }
             more
           }
@@ -168,30 +172,56 @@ object Tailer {
               if (s < first) first = s
               if (s > last) last = s
             }
-            if (!r.isNullAt(payloadAt)) bytes += r.getUTF8String(payloadAt).numChars
+            if (!r.isNullAt(bytesAt)) bytes += r.getUTF8String(bytesAt).numChars
             r
           }
         }
       })
     }
+    /** True once some job drained a partition of `frame`. */
+    def drained: Boolean = !acc.isZero
     /** (partitionId, firstOffset, lastOffset, rowsApplied, bytesIn) rows
-      * of the partitions the tap saw; empty when nothing scanned `frame`.
+      * of the non-empty partitions the tap saw.
       */
     def rows: Seq[Row] =
-      acc.value.asScala.toMap.toSeq.sortBy(_._1).map { case (p, l) => l.toRow(p) }
+      acc.value.asScala.toMap.toSeq.filter(_._2.rows > 0).sortBy(_._1)
+        .map { case (p, l) => l.toRow(p) }
   }
 
   /** The same per-partition lineage as [[LineageTap]], as a job of its
     * own over `raw` — for a batch whose merge scanned nothing.
     */
-  private def lineageAggregate(raw: DataFrame): Seq[Row] =
+  private def lineageAggregate(raw: DataFrame, bytesCol: String): Seq[Row] =
     raw.groupBy(spark_partition_id().as("partitionId"))
       .agg(
         min("seq").as("firstOffset"),
         max("seq").as("lastOffset"),
         count(lit(1)).as("rowsApplied"),
-        sum(coalesce(length(col("payload")).cast("long"), lit(0L))).as("bytesIn"))
+        sum(coalesce(length(col(bytesCol)).cast("long"), lit(0L))).as("bytesIn"))
       .collect().toSeq
+
+  /** Appends one delivery of a batch's lineage to `dir`, after its merge
+    * returned — a failed or crashed merge leaves NO lineage rows for the
+    * batch. The rows come from `tap` when a job drained it; a drained tap
+    * that saw no rows (an empty batch) writes nothing. Only when nothing
+    * drained the tap (a fenced redelivery, whose merge scanned nothing)
+    * are they aggregated from `raw` in a job of their own. `attempt`
+    * stamps this delivery so [[readLineage]] can keep exactly one attempt
+    * per batch — a re-delivered batch may be re-partitioned differently
+    * (core-count change across a restart), so rows from two attempts are
+    * NOT per-partition duplicates and must never mix.
+    */
+  private def appendLineage(spark: SparkSession, dir: String, batchId: Long,
+                            tap: LineageTap, raw: DataFrame): Unit = {
+    val parts = if (tap.drained) tap.rows else lineageAggregate(raw, tap.bytesCol)
+    if (parts.nonEmpty) {
+      val attempt = System.currentTimeMillis
+      spark.createDataFrame(parts.map(r => Row.fromSeq(batchId +: r.toSeq :+ attempt)).asJava,
+          lineageSchema)
+        .coalesce(1)
+        .write.mode(SaveMode.Append).parquet(dir)
+    }
+  }
 
   /** One micro-batch: raw events → LWW → normalize → MERGE → lineage.
     *
@@ -215,7 +245,7 @@ object Tailer {
     val rawCols = raw.select("repo", "path", "seq", "op", "schema_id", "ts", "payload")
     // per-partition lineage over the RAW input (offsets = seq range seen),
     // gathered on the scan that reads the payloads anyway
-    val tap = new LineageTap(rawCols)
+    val tap = new LineageTap(rawCols, "payload")
     val keys = Seq("repo", "path")
     // Adaptive two-pass broadcast LWW — winners are found on the narrow
     // (key, seq) columns and payloads never shuffle (guide §2.3); batches
@@ -250,19 +280,7 @@ object Tailer {
       ("merge.touchedBuckets", stats.touchedBuckets.toDouble),
       ("merge.rowsAfter", stats.rowsAfter.toDouble),
       ("merge.seconds", secs)))
-    // commit-then-append: only reached after table.merge returned — a
-    // failed/crashed merge leaves NO lineage rows for the batch. A fenced
-    // redelivery scanned nothing, so its lineage is aggregated on its own.
-    // `attempt` stamps this delivery so readLineage can keep exactly one
-    // attempt per batch — a re-delivered batch may be re-partitioned
-    // differently (core-count change across a restart), so rows from two
-    // attempts are NOT per-partition duplicates and must never mix.
-    val parts = Some(tap.rows).filter(_.nonEmpty).getOrElse(lineageAggregate(rawCols))
-    val attempt = System.currentTimeMillis
-    spark.createDataFrame(parts.map(r => Row.fromSeq(batchId +: r.toSeq :+ attempt)).asJava,
-        lineageSchema)
-      .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(cfg.lineageDir)
+    appendLineage(spark, cfg.lineageDir, batchId, tap, rawCols)
   }
 
   /** Cursor-based incremental sync with EXPIRED-HISTORY RECOVERY: drains
@@ -496,20 +514,14 @@ object Tailer {
     */
   def applyChanges(derived: LakeTable, feed: DataFrame, batchId: Long,
                    lineageDir: Option[String] = None): Unit = {
-    // The feed subtree is the EXPENSIVE part of a replication batch (an
-    // executor-side bucket diff: two parquet scans of every changed bucket
-    // + LWW fold) and it is consumed up to three times below (isEmpty
-    // probe, merge, lineage stats) — persist so the diff runs once; the
-    // window is admission-bounded so the cache is micro-batch-sized.
-    val cached = feed.persist()
-    try { applyChangesCached(derived, cached, batchId, lineageDir) }
-    finally cached.unpersist()
-  }
-
-  private def applyChangesCached(derived: LakeTable, feed: DataFrame, batchId: Long,
-                                 lineageDir: Option[String]): Unit = {
-    if (feed.isEmpty) return
-    val batch = feed.select(
+    // same per-partition lineage contract as the WAL tailer: offsets are
+    // the feed's seq range, bytes the changed content. The tap sits under
+    // the merge's own read of the feed (the expensive part of a
+    // replication batch: an executor-side bucket diff), so the diff runs
+    // once: COW caches the batch for its touched-bucket count and rewrite,
+    // MOR reads it once in its file write.
+    val tap = new LineageTap(feed, "content")
+    val batch = tap.frame.select(
       col("repo"), col("path"), col("op"),
       when(col("op") === "D", col("seq") + 1).otherwise(col("seq")).as("seq"),
       col("commit"), col("language"), col("content"), col("size_bytes"))
@@ -519,25 +531,10 @@ object Tailer {
     // drop them — diverging the replica until the key's next real event.
     // (On a MOR mirror the equal-seq append wins at read time through the
     // latest-write file-path tie-break — monotone write tokens.)
+    // An empty feed commits nothing (the merge's own output says so).
     derived.merge(feed.sparkSession, batch, batchId, updateColumns = None,
       retries = 3, srcKeyUnique = true, acceptEqualSeq = true)
-    // same per-partition lineage contract as the WAL tailer (north rule):
-    // offsets are the feed's seq range, bytes are the change payload size.
-    // Written AFTER the merge commit — a crash in between re-delivers the
-    // batch, the fence no-ops it, and lineage readers dedupe by
-    // (batchId, partitionId), identical to applyBatch's contract.
-    lineageDir.foreach { dir =>
-      feed.groupBy(spark_partition_id().as("partitionId"))
-        .agg(
-          min("seq").as("firstOffset"),
-          max("seq").as("lastOffset"),
-          count(lit(1)).as("rowsApplied"),
-          sum(coalesce(length(col("content")).cast("long"), lit(0L))).as("bytesIn"))
-        .select(lit(batchId).as("batchId"), col("partitionId"),
-          col("firstOffset"), col("lastOffset"), col("rowsApplied"), col("bytesIn"),
-          lit(System.currentTimeMillis).as("attempt"))
-        .write.mode(SaveMode.Append).parquet(dir)
-    }
+    lineageDir.foreach(appendLineage(feed.sparkSession, _, batchId, tap, feed))
   }
 
   /** Follow a primary table's change feed into a derived table until the

@@ -113,6 +113,14 @@ class LakeModelSpec extends SparkSpec {
         assert(liveState(table.read(spark)) === model, s"state@round$round[$mode]")
       }
 
+      // a batch with no rows commits nothing and leaves the fence where it was
+      val h = table.head()
+      val none = table.merge(spark, Seq.empty[(String, String, String, Long, String, String,
+        String, Option[Long])].toDF(cols: _*), batchId)
+      assert(!none.applied, s"empty merge applied [$mode]")
+      assert(table.headVersion() === h.version, s"empty merge committed [$mode]")
+      assert(table.head().lastBatchId === h.lastBatchId, s"empty merge moved the fence [$mode]")
+
       // invariant 2+3: CDF between EVERY adjacent committed version pair
       // reconstructs the destination state; maintenance versions diff empty
       val versions = stateAt.keys.toSeq.sorted

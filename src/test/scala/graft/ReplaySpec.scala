@@ -512,23 +512,56 @@ class ReplaySpec extends SparkSpec {
   }
   private def multiPartRaw = spark.read.schema(changeLogSchema).parquet(multiPartLog)
 
+  /** A replication feed (the [[Tailer.applyChanges]] columns) of 1200
+    * distinct keys in 4 files, so one input partition per file; every
+    * tenth row is a delete without content.
+    */
+  private lazy val multiPartFeedDir: String = {
+    val d = tmpDir("multipart-feed")
+    (0 until 1200).map { i =>
+      val del = i % 10 == 9
+      (s"r${i % 5}", s"p$i", if (del) "D" else "I", i.toLong, s"c$i", "scala",
+        if (del) null else s"body-$i", Option(i.toLong))
+    }.toDF("repo", "path", "op", "seq", "commit", "language", "content", "size_bytes")
+      .repartition(4).write.mode("overwrite").parquet(d)
+    d
+  }
+  private def multiPartFeed = spark.read.parquet(multiPartFeedDir)
+
+  private def lineageStats(df: org.apache.spark.sql.DataFrame) =
+    df.select("partitionId", "firstOffset", "lastOffset", "rowsApplied", "bytesIn")
+      .as[(Int, Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+
+  /** The per-partition lineage of `raw` as a standalone aggregate. */
+  private def standaloneLineage(raw: org.apache.spark.sql.DataFrame, bytesCol: String) =
+    lineageStats(raw.groupBy(spark_partition_id().as("partitionId"))
+      .agg(min("seq").as("firstOffset"), max("seq").as("lastOffset"),
+        count(lit(1)).as("rowsApplied"),
+        sum(coalesce(length(col(bytesCol)).cast("long"), lit(0L))).as("bytesIn")))
+
   test("lineage rides the batch scan: per-partition rows equal the standalone aggregate") {
     val (table, tc) = morBatchTarget("lineage-fused")
     val raw = multiPartRaw
     assert(raw.rdd.getNumPartitions >= 3, "the batch spans several input partitions")
     Tailer.applyBatch(table, tc)(raw, 0L)
-    def stats(df: org.apache.spark.sql.DataFrame) =
-      df.select("partitionId", "firstOffset", "lastOffset", "rowsApplied", "bytesIn")
-        .as[(Int, Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
-    val expected = stats(raw.groupBy(spark_partition_id().as("partitionId"))
-      .agg(min("seq").as("firstOffset"), max("seq").as("lastOffset"),
-        count(lit(1)).as("rowsApplied"),
-        sum(coalesce(length(col("payload")).cast("long"), lit(0L))).as("bytesIn")))
+    val expected = standaloneLineage(raw, "payload")
     assert(expected.size >= 3)
     val written = spark.read.parquet(tc.lineageDir)
     assert(written.select("batchId").distinct().as[Long].collect().toSeq === Seq(0L))
-    assert(stats(written) === expected)
+    assert(lineageStats(written) === expected)
     assert(table.head().lastBatchId === 0L)
+
+    // the replication sink: the tap sits under a COW mirror's merge and
+    // counts the feed's content
+    val feed = multiPartFeed
+    assert(feed.rdd.getNumPartitions >= 3, "the feed spans several input partitions")
+    val base = tmpDir("lineage-fused-feed")
+    val mirror = LakeTable(s"$base/mirror", 8)
+    Tailer.applyChanges(mirror, feed, 0L, Some(s"$base/lineage"))
+    val fromFeed = standaloneLineage(feed, "content")
+    assert(fromFeed.size >= 3)
+    assert(lineageStats(spark.read.parquet(s"$base/lineage")) === fromFeed)
+    assert(mirror.head().lastBatchId === 0L)
   }
 
   test("a fenced redelivery still appends its lineage, and readLineage sums to the batch") {
@@ -545,6 +578,29 @@ class ReplaySpec extends SparkSpec {
     assert(all.select("attempt").distinct().count() === 2L)
     assert(Tailer.readLineage(spark, tc.lineageDir)
       .agg(sum("rowsApplied")).head.getLong(0) === events)
+
+    // the replication sink, on a MOR mirror
+    val feed = multiPartFeed
+    val rows = feed.count()
+    val base = tmpDir("lineage-fenced-feed")
+    val mirror = LakeTable(s"$base/mirror", 8, LakeTable.Mor)
+    val dir = s"$base/lineage"
+    Tailer.applyChanges(mirror, feed, 0L, Some(dir))
+    val mv = mirror.headVersion()
+    Tailer.applyChanges(mirror, feed, 0L, Some(dir))
+    assert(mv === 1, "the feed committed once")
+    assert(mirror.headVersion() === mv, "the fenced feed committed nothing")
+    assert(spark.read.parquet(dir).select("attempt").distinct().count() === 2L,
+      "the redelivery appended its own attempt")
+    assert(Tailer.readLineage(spark, dir).agg(sum("rowsApplied")).head.getLong(0) === rows)
+    // an empty feed (its partitions drained, no rows) commits nothing and
+    // appends no lineage file
+    def lineageFiles = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+      .iterator.asScala.count(_.getFileName.toString.endsWith(".parquet"))
+    val files = lineageFiles
+    Tailer.applyChanges(mirror, feed.filter(col("seq") < 0), 1L, Some(dir))
+    assert(mirror.headVersion() === mv, "the empty feed committed nothing")
+    assert(lineageFiles === files, "the empty feed appended a lineage file")
   }
 
   test("a MOR batch reads its log at most twice and runs no isEmpty or count job") {
@@ -572,6 +628,63 @@ class ReplaySpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
     assert(table.head().lastBatchId === 0L, "the batch applied")
     assert(scans.get() <= 2, s"log scans: ${scans.get()}")
+    assert(probes.isEmpty, s"probe jobs: $probes")
+  }
+
+  test("replication and view batches run no isEmpty probe and no lineage aggregate") {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val base = tmpDir("sink-guard")
+    val primary = LakeTable(s"$base/primary", 4, LakeTable.Mor)
+    primary.merge(spark, multiPartFeed, 0L)
+    val mirror = LakeTable(s"$base/mirror", 4)
+    val sc = spark.sparkContext
+    val probes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // a call site's long form opens with the Spark method the caller
+    // invoked, e.g. `...Dataset.isEmpty(Dataset.scala:N)`
+    def probe(site: String, stack: String): Unit = {
+      val top = stack.linesIterator.take(2).mkString(" < ")
+      if (site.startsWith("isEmpty at") || top.contains(".isEmpty(") ||
+          stack.contains("lineageAggregate")) probes.add(top)
+    }
+    // AQE submits a query's jobs from its own threads, so a job's stage
+    // may name that thread; its SQL execution keeps the caller's stack
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.stageInfos.foreach(s => probe(s.name, s.details))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          probe(x.description, x.details)
+        case _ =>
+      }
+    }
+    // a streaming query pins its jobs' call site to its start(); the
+    // started event arrives on the query's thread before its first batch,
+    // so clearing the pin there names each job by the stack that ran it
+    val unpin = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = sc.clearCallSite()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    org.apache.spark.graftbridge.BusDrain(sc)
+    sc.addSparkListener(listener)
+    spark.streams.addListener(unpin)
+    try {
+      Tailer.followInto(spark, s"$base/primary", mirror, s"$base/mirror-ckpt",
+        Some(s"$base/mirror-lineage"))
+      graft.stream.Mv.maintainInto(spark, s"$base/primary", s"$base/view", s"$base/view-ckpt")
+      org.apache.spark.graftbridge.BusDrain(sc)
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.streams.removeListener(unpin)
+    }
+    val live = primary.read(spark).count()
+    assert(mirror.read(spark).count() === live, "mirror parity")
+    assert(Tailer.readLineage(spark, s"$base/mirror-lineage")
+      .agg(sum("rowsApplied")).head.getLong(0) === live, "the bootstrap feed's lineage")
+    assert(graft.stream.Mv.read(spark, s"$base/view").agg(sum("cnt")).head.getLong(0) === live,
+      "view parity")
     assert(probes.isEmpty, s"probe jobs: $probes")
   }
 
