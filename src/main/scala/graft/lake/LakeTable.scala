@@ -68,7 +68,6 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
     // Tombstones are GC'd by compact().
     StructField("deleted", BooleanType, nullable = false)
   ))
-  private val payloadCols = Seq("commit", "language", "content", "size_bytes", "seq")
 
   def bucketExpr: Column = pmod(hash(col("repo"), col("path")), lit(numBuckets))
 
@@ -591,75 +590,26 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
     * mirror consumers don't need it (LWW by key replaces whole rows),
     * hence opt-in, default off.
     *
-    * IO is proportional to CHANGED buckets, not table size: a bucket whose
-    * manifest reference is identical in both snapshots cannot differ
-    * (manifests are immutable), so only differing buckets are read and
-    * diffed — a full-outer equi-join on key. A row is an update when ANY
-    * payload column differs (null-safe), not just `seq`: a SQL MERGE
-    * UPDATE clause may mutate payload while leaving seq unassigned, and
-    * those rows must still reach the feed. Compaction rewrites manifests
-    * without changing live state; those buckets are re-read but diff to
-    * zero rows, never false changes. Cost at scale: 2 scans of the touched
-    * buckets + one key-partitioned shuffle (AQE handles skew).
+    * The window is planned NOW by [[graft.stream.CdfFeed.plan]] (an expired
+    * endpoint throws [[LakeTable.ExpiredHistoryException]] here, with
+    * bootstrap guidance) and read by the one change-feed diff,
+    * [[graft.stream.CdfPartitionReader]] — the `graft-cdf` stream's reader:
+    * only buckets whose manifest reference differs between the endpoints
+    * are read, and a row is an update when ANY payload column differs
+    * (null-safe), not just `seq`.
     */
   def changesBetween(spark: SparkSession, fromVersion: Int, toVersion: Int,
                      updatePreimages: Boolean = false): DataFrame = {
     require(fromVersion < toVersion,
       s"changesBetween: fromVersion $fromVersion must be < toVersion $toVersion")
+    // a crashed writer's stray v<N>.json may EXIST without ever having
+    // committed — reading it would emit phantom changes
     val committed = headVersion()
-    Seq(fromVersion, toVersion).foreach { v =>
-      // v > HEAD: a crashed writer's stray v<N>.json may EXIST without ever
-      // having committed — reading it would emit phantom changes
-      if (v > committed)
-        throw new IllegalStateException(
-          s"changesBetween: snapshot v$v is not committed (head: v$committed)")
-      if (!Files.exists(metaDir.resolve(s"v$v.json")))
-        throw new IllegalStateException(
-          s"changesBetween: snapshot v$v has been expired (oldest retained: " +
-            s"v${versions().headOption.getOrElse(-1)}) — incremental history is gone; " +
-            "bootstrap the consumer with a full read() and seed its cursor at head")
-    }
-    val sFrom = snapshotAt(fromVersion)
-    val sTo = snapshotAt(toVersion)
-    val refsFrom = sFrom.manifests.map(r => r.bucket -> r).toMap
-    val refsTo = sTo.manifests.map(r => r.bucket -> r).toMap
-    val changed = (refsFrom.keySet ++ refsTo.keySet).toSeq.sorted
-      .filter(b => refsFrom.get(b) != refsTo.get(b))
-    val before = liveRows(readFiles(spark, changed.flatMap(filesOf(sFrom, _))), sFrom.mode)
-    val after = liveRows(readFiles(spark, changed.flatMap(filesOf(sTo, _))), sTo.mode)
-    val beforeRenamed = payloadCols.foldLeft(before)(
-      (d, c) => d.withColumnRenamed(c, s"_b_$c"))
-    val payloadDiffers = payloadCols
-      .map(c => !(col(c) <=> col(s"_b_$c")))
-      .reduce(_ || _)
-    val joined = after.join(beforeRenamed, Seq("repo", "path"), "full_outer")
-      .withColumn("op",
-        when(col("_b_seq").isNull, lit("I"))
-          .when(col("seq").isNull, lit("D"))
-          .when(payloadDiffers, lit("U")))
-      .filter(col("op").isNotNull)
-    if (!updatePreimages)
-      joined.select(Seq(col("op"), col("repo"), col("path")) ++
-        payloadCols.map(c =>
-          when(col("op") === "D", col(s"_b_$c")).otherwise(col(c)).as(c)): _*)
-    else {
-      // one output row per IMAGE: U explodes to [U- before, U+ after] in a
-      // single pass over the join — no self-union that would re-run the
-      // diff subtree twice
-      def img(op: Column, of: String => Column) =
-        struct(Seq(op.as("op")) ++ payloadCols.map(c => of(c).as(c)): _*)
-      val afterImg =
-        img(when(col("op") === "U", lit("U+")).otherwise(col("op")), col)
-      joined.select(col("repo"), col("path"),
-          explode(
-            when(col("op") === "U",
-              array(img(lit("U-"), c => col(s"_b_$c")), afterImg))
-            .when(col("op") === "D",
-              array(img(lit("D"), c => col(s"_b_$c"))))
-            .otherwise(array(afterImg))).as("_img"))
-        .select(Seq(col("_img.op").as("op"), col("repo"), col("path")) ++
-          payloadCols.map(c => col(s"_img.$c").as(c)): _*)
-    }
+    if (toVersion > committed)
+      throw new IllegalStateException(
+        s"changesBetween: snapshot v$toVersion is not committed (head: v$committed)")
+    graft.stream.CdfFeed.window(spark, this, fromVersion, toVersion,
+      updatePreimages, fresh = false)
   }
 
   /** Drain new changes since the durable cursor: if the head has advanced
@@ -671,41 +621,21 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
     * upserts/deletes by key re-apply harmlessly). A missing cursor file
     * starts from version 0 (full history as one feed). Crash between
     * callback and commit ⇒ the same window is re-delivered, never skipped.
-    * A FRESH consumer (no cursor file) bootstraps even after
-    * expireSnapshots erased v0: its window needs no history — v0 is the
-    * empty initial snapshot, so the bootstrap feed is exactly the live
-    * state at head as I rows, emitted directly. A NON-fresh cursor that
-    * predates the oldest retained snapshot fails with bootstrap guidance
-    * ([[changesBetween]]) rather than silently skipping history.
+    * A FRESH consumer (cursor at 0) bootstraps even after expireSnapshots
+    * erased v0: the planner reads its window as the live state at head as
+    * I rows. A NON-fresh cursor that predates the oldest retained snapshot
+    * fails with bootstrap guidance rather than silently skipping history.
     */
   def drainChanges(spark: SparkSession, cursorFile: Path,
                    updatePreimages: Boolean = false): Option[ChangeWindow] = {
-    val from =
-      if (!Files.exists(cursorFile)) 0
-      else Files.readString(cursorFile).trim.toIntOption.getOrElse(
-        throw new IllegalStateException(
-          s"cursor file $cursorFile is corrupt (expected a snapshot version " +
-            "integer) — delete it to re-consume from v0, or re-seed it with " +
-            "the last version the consumer durably applied"))
+    val from = readCursor(cursorFile)
     // fast poll: an unchanged table costs one HEAD-pointer read, no
     // snapshot-JSON IO (same contract as the streaming source's tick)
     val to = headVersion()
     if (to <= from) None
-    else if (from == 0 && !Files.exists(metaDir.resolve("v0.json"))) {
-      // fresh consumer, but v0 was expired: the bootstrap window needs no
-      // history — v0 is the empty initial snapshot, so changesBetween(0,
-      // to) is BY CONSTRUCTION the live state at v<to> as I rows (the
-      // before side is empty). Emit exactly that, read AT v<to> (not
-      // head(), which a racing commit could advance past the cursor).
-      val sTo = snapshotAt(to)
-      val live = liveRows(readFiles(spark, filesOf(sTo)), sTo.mode)
-      Some(ChangeWindow(0, to,
-        live.select(Seq(lit("I").as("op"), col("repo"), col("path")) ++
-          payloadCols.map(col): _*),
-        () => LakeTable.writeCursor(cursorFile, to)))
-    }
     else Some(ChangeWindow(from, to,
-      changesBetween(spark, from, to, updatePreimages),
+      graft.stream.CdfFeed.window(spark, this, from, to, updatePreimages,
+        fresh = from == 0),
       () => LakeTable.writeCursor(cursorFile, to)))
   }
 
@@ -1789,6 +1719,21 @@ object LakeTable {
       snapshotOn: Snapshot => Snapshot,
       result: Snapshot => A,
       onLost: (Snapshot, Snapshot) => Verdict[A] = (_: Snapshot, _: Snapshot) => Recompute)
+
+  /** The version a consumer cursor names: 0 when the file is missing (a
+    * fresh consumer), a curated error when it does not hold an integer.
+    */
+  private[graft] def readCursor(cursorFile: Path): Int =
+    if (!Files.exists(cursorFile)) 0
+    else Files.readString(cursorFile).trim.toIntOption.getOrElse(
+      throw new IllegalStateException(
+        s"cursor file $cursorFile is corrupt (expected a snapshot version " +
+          "integer) — delete it to re-consume from v0, or re-seed it with " +
+          "the last version the consumer durably applied"))
+
+  /** A change window needs snapshot history that expireSnapshots removed. */
+  final class ExpiredHistoryException(message: String)
+    extends IllegalStateException(message)
 
   /** Atomically persist a consumer cursor (tmp file + ATOMIC_MOVE +
     * REPLACE_EXISTING): a reader never observes a torn write — the ONE

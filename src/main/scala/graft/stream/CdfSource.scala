@@ -1,12 +1,15 @@
 package graft.stream
 
 import graft.lake.LakeTable
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxFiles, ReadMaxRows, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -78,7 +81,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object CdfFeed {
   /** One change row: op ∈ I/U/D + the table columns (I/U = after-image,
-    * D = before-image). Matches [[LakeTable.changesBetween]] exactly.
+    * D = before-image) — the schema of every change-feed consumer.
     * With the `updatePreimages` source option, U is replaced by the
     * retraction pair U- (before-image) / U+ (after-image) — what lets a
     * downstream AGGREGATE be maintained incrementally (see [[Mv]]);
@@ -111,6 +114,120 @@ object CdfFeed {
     * executor's working memory with headroom for the streamed after pass.
     */
   val DefaultMaxStateBytes: Long = 512L * 1024 * 1024
+
+  /** The input partitions of the change window [from, to] of `table`: one
+    * [[CdfInputPartition]] per changed bucket (or hash-of-key slice of one)
+    * for the [[CdfPartitionReader]] to diff. Every consumer plans here: the
+    * `graft-cdf` stream, [[LakeTable.changesBetween]] and
+    * [[LakeTable.drainChanges]]. `fresh` = the consumer has read nothing
+    * yet (`from` is 0), so an expired v0 does not fail it; any other window
+    * whose endpoint was expired throws [[LakeTable.ExpiredHistoryException]].
+    */
+  def plan(table: LakeTable, from: Int, to: Int, updatePreimages: Boolean,
+           fresh: Boolean, maxStateRows: Long = DefaultMaxStateRows,
+           maxStateBytes: Long = DefaultMaxStateBytes): Array[InputPartition] = {
+    if (to <= from) return Array.empty
+    def paths(fs: Seq[LakeTable.DataFile]): Array[String] =
+      fs.map(f => s"${table.root}/${f.path}").toArray
+    // reader-memory bound: a bucket whose endpoint state exceeds
+    // maxStateRows rows OR maxStateBytes manifest-recorded bytes (both
+    // known from the manifests' denormalized counts — no data IO at plan
+    // time) becomes k hash-of-key slice partitions. afterUnique = the
+    // after snapshot is COW (file set unique-per-key: every commit
+    // rewrites its buckets whole), so the reader streams the after side
+    // in ONE pass with no winner-locator; MOR needs the locator prepass.
+    def sliced(bucket: Int, before: Array[String], after: Array[String],
+               rows: Long, bytes: Long, afterUnique: Boolean): Seq[InputPartition] = {
+      val kRows = (rows + maxStateRows - 1) / maxStateRows
+      val kBytes = (bytes + maxStateBytes - 1) / maxStateBytes
+      val k = math.max(1L, math.max(kRows, kBytes)).toInt
+      (0 until k).map(i => CdfInputPartition(bucket, before, after, i, k,
+        afterUnique, updatePreimages))
+    }
+    // existence is checked EXPLICITLY (not only via the read throwing):
+    // snapshot bodies are cached in the table handle, so a cached endpoint
+    // could otherwise outlive retention and mask the expired error
+    def retained(v: Int): Option[LakeTable.Snapshot] =
+      if (!table.snapshotRetained(v)) None
+      else try Some(table.snapshotAt(v))
+      catch { case _: java.nio.file.NoSuchFileException => None }
+    (retained(from), retained(to)) match {
+      case (None, Some(sTo)) if fresh =>
+        // fresh consumer whose v0 was expired: the BOOTSTRAP window needs
+        // no history — v0 is the empty initial snapshot, so [0, to] is by
+        // construction the live state at v<to> as I rows. Plan v<to>'s
+        // buckets with an EMPTY before side (same reader, same slice
+        // bounds) instead of failing.
+        sTo.manifests.sortBy(_.bucket).flatMap(r =>
+          sliced(r.bucket, Array.empty, paths(table.filesOf(sTo, r.bucket)),
+            r.rowCount, r.sizeBytes, sTo.mode == LakeTable.Cow)).toArray
+      case (Some(sFrom), Some(sTo))
+          if !(sFrom.numBuckets > 0 && sFrom.numBuckets == sTo.numBuckets) =>
+        // a rebucket inside the window changes the key→bucket mapping, so
+        // per-bucket pairing is unsound — fall back to a whole-state diff
+        // (still slice-split under the same memory bounds). Conservative
+        // on legacy snapshots (numBuckets unrecorded, -1): the moduli
+        // cannot be PROVEN equal, and pairing bucket ids across different
+        // moduli would emit a moved key as same-seq D+I rows the
+        // downstream LWW breaks arbitrarily — whole-state diff unless both
+        // sides record the same positive modulus.
+        sliced(-1, paths(table.filesOf(sFrom)), paths(table.filesOf(sTo)),
+          math.max(sFrom.totalRows, sTo.totalRows),
+          math.max(sFrom.manifests.map(_.sizeBytes).sum,
+            sTo.manifests.map(_.sizeBytes).sum), sTo.mode == LakeTable.Cow).toArray
+      case (Some(sFrom), Some(sTo)) =>
+        // a bucket whose manifest ref is identical in both snapshots
+        // cannot differ (manifests are immutable)
+        val refsFrom = sFrom.manifests.map(r => r.bucket -> r).toMap
+        val refsTo = sTo.manifests.map(r => r.bucket -> r).toMap
+        (refsFrom.keySet ++ refsTo.keySet).toArray.sorted
+          .filter(b => refsFrom.get(b) != refsTo.get(b))
+          .flatMap { b =>
+            val rows = math.max(refsFrom.get(b).map(_.rowCount).getOrElse(0L),
+              refsTo.get(b).map(_.rowCount).getOrElse(0L))
+            val bytes = math.max(refsFrom.get(b).map(_.sizeBytes).getOrElse(0L),
+              refsTo.get(b).map(_.sizeBytes).getOrElse(0L))
+            sliced(b, paths(table.filesOf(sFrom, b)), paths(table.filesOf(sTo, b)),
+              rows, bytes, sTo.mode == LakeTable.Cow)
+          }
+      case _ =>
+        throw new LakeTable.ExpiredHistoryException(
+          s"change feed: snapshot window [$from, $to] has been expired " +
+            s"(oldest retained: v${table.versions().headOption.getOrElse(-1)}) — " +
+            "incremental history is gone; bootstrap the consumer with a full " +
+            "read() and seed its checkpoint or cursor at head")
+    }
+  }
+
+  /** The change window [from, to] as a batch DataFrame, planned NOW (so an
+    * expired window fails at the call, not at the first action) and read
+    * by the same [[CdfPartitionReader]] as the stream: every action on the
+    * frame re-reads exactly these partitions.
+    */
+  def window(spark: SparkSession, table: LakeTable, from: Int, to: Int,
+             updatePreimages: Boolean, fresh: Boolean): DataFrame = {
+    val parts = plan(table, from, to, updatePreimages, fresh)
+    ColumnBridge.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      DataSourceV2Relation.create(
+        new CdfWindowTable(s"graft-cdf:${table.root}[$from, $to]", parts), None, None))
+  }
+}
+
+/** One planned change window as a batch-readable DSv2 table. */
+private final class CdfWindowTable(override val name: String,
+                                   parts: Array[InputPartition])
+  extends Table with SupportsRead {
+  override def schema(): StructType = CdfFeed.feedSchema
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    () => new Scan with Batch {
+      override def readSchema(): StructType = CdfFeed.feedSchema
+      override def toBatch: Batch = this
+      override def planInputPartitions(): Array[InputPartition] = parts
+      override def createReaderFactory(): PartitionReaderFactory = new CdfReaderFactory
+      override def description(): String = name
+    }
 }
 
 /** Snapshot-version offset (serialized as the bare integer, same wire
@@ -324,86 +441,11 @@ final class CdfMicroBatchStream(root: String, startVersion: Int,
 
   override def reportLatestOffset(): Offset = CdfOffset(table.headVersion())
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val from = ver(start) // checkpoint offset wins over startVersion (see latestOffset)
-    val to = ver(end)
-    if (to <= from) return Array.empty
-    def files(s: LakeTable.Snapshot, b: Int): Array[String] =
-      table.filesOf(s, b).map(f => s"$root/${f.path}").toArray
-    // reader-memory bound: a bucket whose endpoint state exceeds
-    // maxStateRows rows OR maxStateBytes manifest-recorded bytes (both
-    // known from the manifests' denormalized counts — no data IO at plan
-    // time) becomes k hash-of-key slice partitions. afterUnique = the
-    // after snapshot is COW (file set unique-per-key: every commit
-    // rewrites its buckets whole), so the reader streams the after side
-    // in ONE pass with no winner-locator; MOR needs the locator prepass.
-    def sliced(bucket: Int, before: Array[String], after: Array[String],
-               rows: Long, bytes: Long, afterUnique: Boolean): Seq[InputPartition] = {
-      val kRows = (rows + maxStateRows - 1) / maxStateRows
-      val kBytes = (bytes + maxStateBytes - 1) / maxStateBytes
-      val k = math.max(1L, math.max(kRows, kBytes)).toInt
-      (0 until k).map(i => CdfInputPartition(bucket, before, after, i, k,
-        afterUnique, updatePreimages))
-    }
-    // fresh consumer whose v0 was expired: the BOOTSTRAP window needs no
-    // history — v0 is the empty initial snapshot, so [0, to] is by
-    // construction the live state at v<to> as I rows. Plan v<to>'s
-    // buckets with an EMPTY before side (same reader, same slice bounds)
-    // instead of failing; only a RETAINED v<to> can be read exactly.
-    if (from == 0 && !table.snapshotRetained(0) && table.snapshotRetained(to)) {
-      val sTo = table.snapshotAt(to)
-      val afterUnique = sTo.mode == LakeTable.Cow
-      return sTo.manifests.sortBy(_.bucket).flatMap(r =>
-        sliced(r.bucket, Array.empty, files(sTo, r.bucket),
-          r.rowCount, r.sizeBytes, afterUnique)).toArray
-    }
-    // existence is checked EXPLICITLY (not via the read throwing): snapshot
-    // bodies are cached in the table handle, so a cached endpoint could
-    // otherwise outlive retention and mask the curated expired error
-    if (!table.snapshotRetained(from) || !table.snapshotRetained(to))
-      throw new IllegalStateException(
-        s"graft-cdf: snapshot window [$from, $to] has been expired " +
-          "(expireSnapshots ran past the checkpoint) — incremental history " +
-          "is gone; bootstrap the consumer with a full read() and a fresh " +
-          "checkpoint seeded at head")
-    val (sFrom, sTo) =
-      try (table.snapshotAt(from), table.snapshotAt(to))
-      catch { case _: java.nio.file.NoSuchFileException =>
-        throw new IllegalStateException(
-          s"graft-cdf: snapshot window [$from, $to] has been expired " +
-            "(expireSnapshots ran past the checkpoint) — incremental history " +
-            "is gone; bootstrap the consumer with a full read() and a fresh " +
-            "checkpoint seeded at head")
-      }
-    val afterUnique = sTo.mode == LakeTable.Cow
-    // a rebucket inside the window changes the key→bucket mapping, so
-    // per-bucket pairing is unsound — fall back to a whole-state diff
-    // (still slice-split under the same memory bounds). Conservative on
-    // legacy snapshots (numBuckets unrecorded, -1): the moduli cannot be
-    // PROVEN equal, and pairing bucket ids across different moduli would
-    // emit a moved key as same-seq D+I rows the downstream LWW breaks
-    // arbitrarily — whole-state diff unless both sides record the same
-    // positive modulus.
-    if (!(sFrom.numBuckets > 0 && sFrom.numBuckets == sTo.numBuckets)) {
-      val all = (s: LakeTable.Snapshot) =>
-        table.filesOf(s).map(f => s"$root/${f.path}").toArray
-      return sliced(-1, all(sFrom), all(sTo),
-        math.max(sFrom.totalRows, sTo.totalRows),
-        math.max(sFrom.manifests.map(_.sizeBytes).sum,
-          sTo.manifests.map(_.sizeBytes).sum), afterUnique).toArray
-    }
-    val refsFrom = sFrom.manifests.map(r => r.bucket -> r).toMap
-    val refsTo = sTo.manifests.map(r => r.bucket -> r).toMap
-    (refsFrom.keySet ++ refsTo.keySet).toArray.sorted
-      .filter(b => refsFrom.get(b) != refsTo.get(b))
-      .flatMap { b =>
-        val rows = math.max(refsFrom.get(b).map(_.rowCount).getOrElse(0L),
-          refsTo.get(b).map(_.rowCount).getOrElse(0L))
-        val bytes = math.max(refsFrom.get(b).map(_.sizeBytes).getOrElse(0L),
-          refsTo.get(b).map(_.sizeBytes).getOrElse(0L))
-        sliced(b, files(sFrom, b), files(sTo, b), rows, bytes, afterUnique)
-      }
-  }
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    // checkpoint offset wins over startVersion (see latestOffset); a
+    // stream at offset 0 has consumed nothing, so it may bootstrap
+    CdfFeed.plan(table, ver(start), ver(end), updatePreimages,
+      fresh = ver(start) == 0, maxStateRows, maxStateBytes)
 
   override def createReaderFactory(): PartitionReaderFactory = new CdfReaderFactory
 
@@ -434,7 +476,10 @@ final class CdfReaderFactory extends PartitionReaderFactory {
     new CdfPartitionReader(partition.asInstanceOf[CdfInputPartition])
 }
 
-/** Executor-side bucket diff — VECTORIZED and after-side-STREAMING:
+/** The change-feed diff — the only one: the `graft-cdf` stream,
+  * [[LakeTable.changesBetween]] and [[LakeTable.drainChanges]] all read
+  * through it, from partitions [[CdfFeed.plan]] builds. Executor-side,
+  * VECTORIZED and after-side-STREAMING:
   *
   *  - All file scans go through Spark's columnar parquet reader
   *    ([[org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader]]
@@ -446,15 +491,15 @@ final class CdfReaderFactory extends PartitionReaderFactory {
   *    MOR append files resolve to the highest seq; equal-seq ties to the
   *    LATEST file in byte-sorted path order — the same deterministic rule
   *    [[LakeTable]]'s Dataset-side resolve applies via the file-path
-  *    tie-break, so the two paths provably agree).
+  *    tie-break, so a feed and a `readAt` of its endpoints agree).
   *  - The AFTER side is TWO passes, neither of which buffers payloads: a
   *    locator pass records each key's winning (file, row-in-file) — two
   *    ints and a long per key, no content strings — then D rows (before
   *    keys absent from after) emit from the resident before map, then the
   *    streaming pass re-scans the after files IN ORDER and emits each
   *    winner's I/U row the moment it is decoded (I = no before entry, U =
-  *    any payload column differs null-safely — the
-  *    [[LakeTable.changesBetween]] rule). Peak resident state is the
+  *    any payload column differs null-safely, so a payload-only SQL MERGE
+  *    update that keeps seq still reaches the feed). Peak resident state is the
   *    before map + the locator map — roughly HALF the old
   *    both-sides-materialized footprint for document-sized payloads, at
   *    the cost of scanning the after files twice (columnar decode, and
@@ -626,9 +671,9 @@ final class CdfPartitionReader(p: CdfInputPartition)
 
   /** Update emission: plain after-image U row, or — with updatePreimages —
     * the Flink-CDC-style retraction pair [U- before-image, U+ after-image]
-    * (the [[LakeTable.changesBetween]] preimage contract, so the two read
-    * paths stay row-identical). The before Rec's strings are map-owned
-    * clones; only the batch-local key needs cloning.
+    * that lets a downstream aggregate retract an update from its old group.
+    * The before Rec's strings are map-owned clones; only the batch-local
+    * key needs cloning.
     */
   private def uRows(row: InternalRow, repo: UTF8String, path: UTF8String,
                     b: Rec): List[InternalRow] =

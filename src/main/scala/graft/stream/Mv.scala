@@ -127,23 +127,20 @@ object Mv {
     val dir = Paths.get(viewDir)
     pointer(dir).foreach { applied =>
       checkConsumer(dir, cursorFile.toString)
-      val cur = if (Files.exists(cursorFile))
-        Files.readString(cursorFile).trim.toLong else 0L
-      if (applied > cur)
+      if (applied > graft.lake.LakeTable.readCursor(cursorFile))
         graft.lake.LakeTable.writeCursor(cursorFile, applied.toInt)
     }
     val window =
       try table.drainChanges(spark, cursorFile, updatePreimages = true)
       catch {
         // the cursor's window was expired (expireSnapshots outran this
-        // view): changesBetween's generic guidance ("full read + re-seed
+        // view): the change feed's generic guidance ("full read + re-seed
         // the cursor") is WRONG for an aggregate view — a keyed mirror can
         // absorb a full-state merge, but a delta-folded aggregate cannot
         // distinguish already-counted rows. The exact rebuild is total:
         // drop the view and cursor; the next run's v0 window IS the full
         // live state as I rows, so the bootstrap fold recreates the view.
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.contains("expired") =>
+        case e: graft.lake.LakeTable.ExpiredHistoryException =>
           throw new IllegalStateException(
             s"mv: the view's change window was expired on the primary " +
               s"(${e.getMessage}). An aggregate view cannot be healed " +

@@ -303,7 +303,6 @@ object Tailer {
   def resyncInto(spark: SparkSession, primaryRoot: String, derived: LakeTable,
                  cursorFile: java.nio.file.Path): Boolean = {
     val primary = LakeTable.open(primaryRoot)
-    def seed(v: Int): Unit = LakeTable.writeCursor(cursorFile, v)
     // A MISSING cursor on a mirror that already holds state is a lost
     // cursor, not a fresh consumer: the bootstrap feed (live state as I
     // rows — whether v0 is retained or expired) carries no deletes, so
@@ -312,28 +311,18 @@ object Tailer {
     // can purge them — take it directly.
     val lostCursor = !java.nio.file.Files.exists(cursorFile) &&
       derived.head().totalRows > 0
-    try {
-      if (lostCursor) throw new IllegalStateException(
-        "resync: cursor file missing but the mirror holds state — " +
-          "incremental history is unanchored (treated as expired)")
-      primary.drainChanges(spark, cursorFile).foreach { w =>
-        applyChanges(derived, w.feed, batchId = derived.head().lastBatchId + 1)
-        w.commit()
-      }
-      false
-    } catch { case e: IllegalStateException if e.getMessage != null &&
-        (e.getMessage.contains("expired") || e.getMessage.contains("unanchored")) =>
-      // Full sync as ONE synthetic change-feed batch through the normal
-      // sink ([[applyChanges]]), so it works on COW and MOR mirrors alike
-      // (the previous SQL-MERGE form required COW). Pinned at headV so the
-      // re-seeded cursor and the applied state name the same snapshot:
-      //  - every primary live row as a U row (equal-seq payload mutations
-      //    inside the expired gap land because the sink accepts equal-seq
-      //    source wins);
-      //  - every key live in the mirror but gone from the primary as a D
-      //    row carrying the mirror's own seq (the sink's tombstone bump
-      //    makes it outrank the stale row — the arm that makes recovery
-      //    exact for keys deleted inside the gap).
+    // Full sync as ONE synthetic change-feed batch through the normal sink
+    // ([[applyChanges]]), so it works on COW and MOR mirrors alike. Pinned
+    // at headV so the re-seeded cursor and the applied state name the same
+    // snapshot:
+    //  - every primary live row as a U row (equal-seq payload mutations
+    //    inside the expired gap land because the sink accepts equal-seq
+    //    source wins);
+    //  - every key live in the mirror but gone from the primary as a D row
+    //    carrying the mirror's own seq (the sink's tombstone bump makes it
+    //    outrank the stale row — the arm that makes recovery exact for
+    //    keys deleted inside the gap).
+    def fullSync(): Boolean = {
       val headV = primary.headVersion()
       val state = primary.readAt(spark, headV)
         .select("repo", "path", "commit", "language", "content", "size_bytes", "seq")
@@ -348,9 +337,17 @@ object Tailer {
         .withColumn("size_bytes", lit(null).cast("long"))
       applyChanges(derived, upserts.unionByName(gone),
         batchId = derived.head().lastBatchId + 1)
-      seed(headV)
+      LakeTable.writeCursor(cursorFile, headV)
       true
     }
+    if (lostCursor) fullSync()
+    else try {
+      primary.drainChanges(spark, cursorFile).foreach { w =>
+        applyChanges(derived, w.feed, batchId = derived.head().lastBatchId + 1)
+        w.commit()
+      }
+      false
+    } catch { case _: LakeTable.ExpiredHistoryException => fullSync() }
   }
 
   /** Canonical lineage reader: the lineage dir is APPENDED at-least-once
@@ -498,8 +495,8 @@ object Tailer {
     flushMetrics(spark, cfg.metricsDir) // stream drained: land the buffered tail
   }
 
-  /** Apply one change-feed micro-batch (op/repo/path/payload/seq rows from
-    * [[CdfMicroBatchStream]] / [[graft.lake.LakeTable.changesBetween]]) to a DERIVED
+  /** Apply one change-feed micro-batch (op/repo/path/payload/seq rows read
+    * by [[CdfPartitionReader]], through the stream or a drained window) to a DERIVED
     * lake table as an idempotent fenced merge — the sink half of
     * table-to-table replication. A feed window carries at most one row per
     * key by construction, so the merge's cardinality precondition holds.
@@ -526,7 +523,7 @@ object Tailer {
       when(col("op") === "D", col("seq") + 1).otherwise(col("seq")).as("seq"),
       col("commit"), col("language"), col("content"), col("size_bytes"))
     // acceptEqualSeq: the primary's SQL MERGE may mutate payload WITHOUT
-    // assigning seq; changesBetween still emits those rows as U with the
+    // assigning seq; the change feed still emits those rows as U with the
     // seq the mirror already holds, and a strict `>` guard would silently
     // drop them — diverging the replica until the key's next real event.
     // (On a MOR mirror the equal-seq append wins at read time through the

@@ -20,6 +20,44 @@ class CdfStreamSpec extends SparkSpec {
     t.read(spark).select("repo", "path", "seq", "content")
       .as[(String, String, Long, String)].collect().toSet
 
+  /** A change row as (op, repo, path, commit, language, content, size_bytes, seq). */
+  private type Row8 = (String, String, String, String, String, String, Option[Long], Long)
+
+  private def rows8(feed: DataFrame): Set[Row8] =
+    feed.select("op", "repo", "path", "commit", "language", "content", "size_bytes", "seq")
+      .as[Row8].collect().toSet
+
+  /** The change window [from, to] diffed on the driver, independently of
+    * the change-feed reader: each endpoint's live state comes from `readAt`
+    * (the Dataset LWW resolve) as a map by key; a key only `to` holds is I,
+    * one only `from` holds is D (before-image), one whose payload differs
+    * is U (after-image) or, with preimages, the U-/U+ pair. An expired v0
+    * reads as empty: it is the table's empty initial snapshot.
+    */
+  private def referenceDiff(t: LakeTable, from: Int, to: Int,
+                            updatePreimages: Boolean = false): Set[Row8] = {
+    type Image = (String, String, String, Option[Long], Long)
+    def at(v: Int): Map[(String, String), Image] =
+      if (v == 0 && !t.versions().contains(0)) Map.empty
+      else t.readAt(spark, v)
+        .select("repo", "path", "commit", "language", "content", "size_bytes", "seq")
+        .as[(String, String, String, String, String, Option[Long], Long)].collect()
+        .map(r => (r._1, r._2) -> ((r._3, r._4, r._5, r._6, r._7))).toMap
+    val (before, after) = (at(from), at(to))
+    def row(op: String, k: (String, String), i: Image): Row8 =
+      (op, k._1, k._2, i._1, i._2, i._3, i._4, i._5)
+    (before.keySet ++ after.keySet).toSeq.flatMap { k =>
+      (before.get(k), after.get(k)) match {
+        case (None, Some(a)) => Seq(row("I", k, a))
+        case (Some(b), None) => Seq(row("D", k, b))
+        case (Some(b), Some(a)) if b != a =>
+          if (updatePreimages) Seq(row("U-", k, b), row("U+", k, a))
+          else Seq(row("U", k, a))
+        case _ => Nil
+      }
+    }.toSet
+  }
+
   test("derived table follows the primary across 3 merge/compact cycles via the feed only") {
     val base = tmpDir("cdf-follow")
     val primary = LakeTable(s"$base/primary", 8)
@@ -222,10 +260,8 @@ class CdfStreamSpec extends SparkSpec {
       }
       r.close(); buf
     }.toSet
-    val want = primary.changesBetween(spark, 0, endV)
-      .select("op", "repo", "path", "seq", "content")
-      .as[(String, String, String, Long, String)].collect().toSet
-    assert(got === want, s"pinned-window diff must match changesBetween(0, $endV)")
+    val want = referenceDiff(primary, 0, endV).map(r => (r._1, r._2, r._3, r._8, r._6))
+    assert(got === want, s"pinned-window diff must match the reference diff of [0, $endV]")
     assert(got.map(t => (t._1, t._2)) === Set(("I", "r1")),
       "window [0,2] live diff is exactly the surviving insert (r2 deleted within it)")
   }
@@ -283,12 +319,15 @@ class CdfStreamSpec extends SparkSpec {
     val head = primary.headVersion()
     assert(head >= 10)
 
-    // two readers: unsplit, and memory-bounded (maxStateRows=2 forces
-    // every bucket into hash-of-key slices) — both must agree with the
-    // Dataset diff
+    // four readers: unsplit and memory-bounded (maxStateRows=2 forces
+    // every bucket into hash-of-key slices), each without and with update
+    // preimages — all must agree with the driver-side reference diff, and
+    // so must the batch frame changesBetween builds over the same reader
     val stream = new graft.stream.CdfMicroBatchStream(s"$base/t", 0, 0)
     val streamSliced = new graft.stream.CdfMicroBatchStream(s"$base/t", 0, 0, maxStateRows = 2L)
-    type Row8 = (String, String, String, String, String, String, Option[Long], Long)
+    val pre = new graft.stream.CdfMicroBatchStream(s"$base/t", 0, 0, updatePreimages = true)
+    val preSliced = new graft.stream.CdfMicroBatchStream(s"$base/t", 0, 0,
+      maxStateRows = 2L, updatePreimages = true)
     def via(s: graft.stream.CdfMicroBatchStream)(from: Int, to: Int): Set[Row8] = {
       val factory = s.createReaderFactory()
       s.planInputPartitions(graft.stream.CdfOffset(from), graft.stream.CdfOffset(to))
@@ -304,25 +343,37 @@ class CdfStreamSpec extends SparkSpec {
           r.close(); buf
         }.toSet
     }
-    def viaDataset(from: Int, to: Int): Set[Row8] =
-      primary.changesBetween(spark, from, to)
-        .select("op", "repo", "path", "commit", "language", "content", "size_bytes", "seq")
-        .as[(String, String, String, String, String, String, Option[Long], Long)]
-        .collect().toSet
     (1 to 10).foreach { _ =>
       val from = rnd.nextInt(head)
       val to = from + 1 + rnd.nextInt(head - from)
-      val want = viaDataset(from, to)
+      val want = referenceDiff(primary, from, to)
       assert(via(stream)(from, to) === want,
-        s"window [$from, $to] diverged between the DSv2 reader and changesBetween")
+        s"window [$from, $to] diverged between the DSv2 reader and the reference diff")
       assert(via(streamSliced)(from, to) === want,
         s"window [$from, $to] diverged under hash-of-key slicing")
+      assert(rows8(primary.changesBetween(spark, from, to)) === want,
+        s"window [$from, $to] diverged between changesBetween and the reference diff")
+      val wantPre = referenceDiff(primary, from, to, updatePreimages = true)
+      assert(via(pre)(from, to) === wantPre,
+        s"window [$from, $to]: preimage reader diverged from the reference diff")
+      assert(via(preSliced)(from, to) === wantPre,
+        s"window [$from, $to]: preimage reader diverged under slicing")
     }
     // slicing actually splits: more partitions than changed buckets
     assert(streamSliced.planInputPartitions(
         graft.stream.CdfOffset(0), graft.stream.CdfOffset(head)).length >
       stream.planInputPartitions(
         graft.stream.CdfOffset(0), graft.stream.CdfOffset(head)).length)
+
+    // a fresh cursor after v0 has been expired: the bootstrap window is
+    // the live state at head as I rows — the reference diff against the
+    // empty v0
+    primary.expireSnapshots(keepLast = 2)
+    assert(!primary.versions().contains(0), "v0 must be expired")
+    val w = primary.drainChanges(spark,
+      java.nio.file.Paths.get(s"$base/fresh-cursor"), updatePreimages = true).get
+    assert(rows8(w.feed) === referenceDiff(primary, 0, w.toVersion),
+      "fresh drain after v0 expiry diverged from the reference diff")
   }
 
   test("rebucket inside the window → whole-state fallback ≡ changesBetween (and legacy numBuckets)") {
@@ -360,12 +411,10 @@ class CdfStreamSpec extends SparkSpec {
       (rows, parts)
     }
     def want(from: Int, to: Int): Set[Row5] =
-      rebucketed.changesBetween(spark, from, to)
-        .select("op", "repo", "path", "seq", "content")
-        .as[(String, String, String, Long, String)].collect().toSet
+      referenceDiff(rebucketed, from, to).map(r => (r._1, r._2, r._3, r._8, r._6))
 
     // window straddling the rebucket: the reader must take the bucket=-1
-    // whole-state path and still agree with the Dataset diff exactly —
+    // whole-state path and still agree with the reference diff exactly —
     // NO spurious D+I for keys that merely moved buckets
     val (got, parts) = viaReader(0, head)
     assert(parts.forall(_.bucket == -1), "a rebucket window must plan the whole-state fallback")
@@ -839,7 +888,6 @@ class CdfStreamSpec extends SparkSpec {
     }
     val head = primary.headVersion()
 
-    type Row8 = (String, String, String, String, String, String, Option[Long], Long)
     def viaReader(s: graft.stream.CdfMicroBatchStream)(from: Int, to: Int): Seq[Row8] = {
       val factory = s.createReaderFactory()
       s.planInputPartitions(graft.stream.CdfOffset(from), graft.stream.CdfOffset(to))
@@ -861,19 +909,15 @@ class CdfStreamSpec extends SparkSpec {
       maxStateRows = 2L, updatePreimages = true)
     val plain = new graft.stream.CdfMicroBatchStream(s"$base/t", 0, 0)
 
-    def viaDataset(from: Int, to: Int): Set[Row8] =
-      primary.changesBetween(spark, from, to, updatePreimages = true)
-        .select("op", "repo", "path", "commit", "language", "content", "size_bytes", "seq")
-        .as[(String, String, String, String, String, String, Option[Long], Long)]
-        .collect().toSet
-
     (1 to 8).foreach { _ =>
       val from = rnd.nextInt(head)
       val to = from + 1 + rnd.nextInt(head - from)
-      val want = viaDataset(from, to)
+      val want = referenceDiff(primary, from, to, updatePreimages = true)
       val got = viaReader(pre)(from, to)
       assert(got.toSet === want,
-        s"window [$from, $to]: preimage reader diverged from changesBetween")
+        s"window [$from, $to]: preimage reader diverged from the reference diff")
+      assert(rows8(primary.changesBetween(spark, from, to, updatePreimages = true)) === want,
+        s"window [$from, $to]: changesBetween(updatePreimages) diverged from the reference diff")
       assert(viaReader(preSliced)(from, to).toSet === want,
         s"window [$from, $to]: preimage reader diverged under slicing")
       // schema-level invariants of the retraction alphabet:

@@ -166,6 +166,22 @@ class MvSpec extends SparkSpec {
       e.getMessage)
   }
 
+  test("a corrupt cursor beside an applied view fails with the curated cursor error") {
+    val base = tmpDir("mv-corrupt-cursor")
+    val primary = LakeTable(s"$base/t", 4)
+    val cursor = java.nio.file.Paths.get(s"$base/cursor")
+    val viewDir = s"$base/view"
+    primary.merge(spark,
+      Seq(("r1", "a", "U", 1L, "c1", "scala", "v1", Option(1L))).toDF(cols: _*), 0L)
+    assert(Mv.maintainViaCursor(spark, s"$base/t", cursor, viewDir))
+    // the view pointer exists, so the heal step parses the cursor first
+    java.nio.file.Files.writeString(cursor, "not-a-version")
+    val e = intercept[IllegalStateException] {
+      Mv.maintainViaCursor(spark, s"$base/t", cursor, viewDir)
+    }
+    assert(e.getMessage.contains(s"cursor file $cursor is corrupt"), e.getMessage)
+  }
+
   test("property: view == recompute under randomized keyed U/D feeds with group moves (seeded)") {
     // Deterministic randomized soak of the maintenance algebra: random
     // upsert/delete ops over a small key space across several windows,

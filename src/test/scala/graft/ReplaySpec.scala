@@ -603,53 +603,31 @@ class ReplaySpec extends SparkSpec {
     assert(lineageFiles === files, "the empty feed appended a lineage file")
   }
 
-  test("a MOR batch reads its log at most twice and runs no isEmpty or count job") {
-    import org.apache.spark.scheduler._
-    val (table, tc) = morBatchTarget("scan-guard")
-    val raw = multiPartRaw
-    val scans = new java.util.concurrent.atomic.AtomicInteger()
-    val probes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    // every file scan in a MOR batch (no compaction, no bucket reads) is
-    // a scan of the batch's log files
-    val listener = new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scans.incrementAndGet()
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        e.stageInfos.map(_.name)
-          .filter(n => n.startsWith("isEmpty at") || n.startsWith("count at"))
-          .foreach(probes.add)
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.graftbridge.BusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      Tailer.applyBatch(table, tc)(raw, 0L)
-      org.apache.spark.graftbridge.BusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(table.head().lastBatchId === 0L, "the batch applied")
-    assert(scans.get() <= 2, s"log scans: ${scans.get()}")
-    assert(probes.isEmpty, s"probe jobs: $probes")
-  }
-
-  test("replication and view batches run no isEmpty probe and no lineage aggregate") {
+  /** Runs `body` and returns the call sites of the probe jobs it ran: jobs
+    * whose caller invoked one of `methods` (e.g. `isEmpty`) or whose stack
+    * passes through one of `frames`. `onStage` sees every submitted stage.
+    * A job is matched by its stages' names and details AND by its SQL
+    * execution's description and details: AQE submits a query's jobs from
+    * its own threads, so a job's stage may name that thread while its SQL
+    * execution keeps the caller's stack.
+    */
+  private def probeJobs(methods: Seq[String], frames: Seq[String] = Nil,
+                        onStage: org.apache.spark.scheduler.StageInfo => Unit = _ => ())(
+      body: => Unit): Seq[String] = {
     import org.apache.spark.scheduler._
     import org.apache.spark.sql.streaming.StreamingQueryListener
-    val base = tmpDir("sink-guard")
-    val primary = LakeTable(s"$base/primary", 4, LakeTable.Mor)
-    primary.merge(spark, multiPartFeed, 0L)
-    val mirror = LakeTable(s"$base/mirror", 4)
     val sc = spark.sparkContext
     val probes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     // a call site's long form opens with the Spark method the caller
     // invoked, e.g. `...Dataset.isEmpty(Dataset.scala:N)`
     def probe(site: String, stack: String): Unit = {
       val top = stack.linesIterator.take(2).mkString(" < ")
-      if (site.startsWith("isEmpty at") || top.contains(".isEmpty(") ||
-          stack.contains("lineageAggregate")) probes.add(top)
+      if (methods.exists(m => site.startsWith(s"$m at") || top.contains(s".$m(")) ||
+          frames.exists(stack.contains)) probes.add(top)
     }
-    // AQE submits a query's jobs from its own threads, so a job's stage
-    // may name that thread; its SQL execution keeps the caller's stack
     val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        onStage(e.stageInfo)
       override def onJobStart(e: SparkListenerJobStart): Unit =
         e.stageInfos.foreach(s => probe(s.name, s.details))
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
@@ -671,13 +649,39 @@ class ReplaySpec extends SparkSpec {
     sc.addSparkListener(listener)
     spark.streams.addListener(unpin)
     try {
-      Tailer.followInto(spark, s"$base/primary", mirror, s"$base/mirror-ckpt",
-        Some(s"$base/mirror-lineage"))
-      graft.stream.Mv.maintainInto(spark, s"$base/primary", s"$base/view", s"$base/view-ckpt")
+      body
       org.apache.spark.graftbridge.BusDrain(sc)
     } finally {
       sc.removeSparkListener(listener)
       spark.streams.removeListener(unpin)
+    }
+    probes.asScala.toSeq
+  }
+
+  test("a MOR batch reads its log at most twice and runs no isEmpty or count job") {
+    val (table, tc) = morBatchTarget("scan-guard")
+    val raw = multiPartRaw
+    val scans = new java.util.concurrent.atomic.AtomicInteger()
+    // every file scan in a MOR batch (no compaction, no bucket reads) is
+    // a scan of the batch's log files
+    val probes = probeJobs(Seq("isEmpty", "count"), onStage = s =>
+      if (s.rddInfos.exists(_.name == "FileScanRDD")) scans.incrementAndGet()) {
+      Tailer.applyBatch(table, tc)(raw, 0L)
+    }
+    assert(table.head().lastBatchId === 0L, "the batch applied")
+    assert(scans.get() <= 2, s"log scans: ${scans.get()}")
+    assert(probes.isEmpty, s"probe jobs: $probes")
+  }
+
+  test("replication and view batches run no isEmpty probe and no lineage aggregate") {
+    val base = tmpDir("sink-guard")
+    val primary = LakeTable(s"$base/primary", 4, LakeTable.Mor)
+    primary.merge(spark, multiPartFeed, 0L)
+    val mirror = LakeTable(s"$base/mirror", 4)
+    val probes = probeJobs(Seq("isEmpty"), frames = Seq("lineageAggregate")) {
+      Tailer.followInto(spark, s"$base/primary", mirror, s"$base/mirror-ckpt",
+        Some(s"$base/mirror-lineage"))
+      graft.stream.Mv.maintainInto(spark, s"$base/primary", s"$base/view", s"$base/view-ckpt")
     }
     val live = primary.read(spark).count()
     assert(mirror.read(spark).count() === live, "mirror parity")
