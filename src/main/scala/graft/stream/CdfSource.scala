@@ -202,7 +202,10 @@ object CdfFeed {
   /** The change window [from, to] as a batch DataFrame, planned NOW (so an
     * expired window fails at the call, not at the first action) and read
     * by the same [[CdfPartitionReader]] as the stream: every action on the
-    * frame re-reads exactly these partitions.
+    * frame re-reads exactly these partitions. They run in at most one task
+    * per core (a narrow coalesce, each reader in turn), so a window of
+    * many small buckets does not cost its consumers one task per bucket
+    * in every later stage.
     */
   def window(spark: SparkSession, table: LakeTable, from: Int, to: Int,
              updatePreimages: Boolean, fresh: Boolean): DataFrame = {
@@ -210,6 +213,7 @@ object CdfFeed {
     ColumnBridge.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       DataSourceV2Relation.create(
         new CdfWindowTable(s"graft-cdf:${table.root}[$from, $to]", parts), None, None))
+      .coalesce(spark.sparkContext.defaultParallelism)
   }
 }
 
@@ -510,9 +514,7 @@ final class CdfPartitionReader(p: CdfInputPartition)
 
   import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
 
-  // file-schema order of a lake data file; also the feed's payload order
-  private val Cols: java.util.List[String] = java.util.Arrays.asList(
-    "repo", "path", "commit", "language", "content", "size_bytes", "seq", "deleted")
+  // column ordinals of CdfPartitionReader.FileSchema
   private val REPO = 0; private val PATH = 1; private val COMMIT = 2
   private val LANG = 3; private val CONTENT = 4; private val SIZE = 5
   private val SEQ = 6; private val DEL = 7
@@ -521,20 +523,30 @@ final class CdfPartitionReader(p: CdfInputPartition)
                                content: UTF8String, sizeBytes: java.lang.Long,
                                seq: Long, deleted: Boolean)
 
+  /** Initialize `reader` on one whole data file the way FileSourceScan does:
+    * a file split over the JVM's one shared read conf. The path-only
+    * `initialize(path, columns)` builds and parses a new Hadoop conf per
+    * file, which took over half of a small change window's time.
+    */
+  private def open(reader: VectorizedParquetRecordReader, file: String): Unit =
+    reader.initialize(
+      new org.apache.hadoop.mapred.FileSplit(new org.apache.hadoop.fs.Path(file), 0L,
+        Long.MaxValue, Array.empty[String]),
+      new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(CdfPartitionReader.ReadConf,
+        new org.apache.hadoop.mapreduce.TaskAttemptID()))
+
   /** Iterate a file list with the vectorized reader, calling `f` with the
     * current batch row (valid only during the call — clone what you keep),
     * the file index and the row index within the file. Files visit in
     * byte-sorted path order, which is what makes "later file wins equal
-    * seq" deterministic. (`initialize(path, columns)` builds its own local
-    * Hadoop conf — the sandbox is local-FS; on a cluster deployment this
-    * is the one seam that would thread the executor's conf instead.)
+    * seq" deterministic.
     */
   private def scan(files: Array[String])(f: (InternalRow, Int, Int) => Unit): Unit = {
     var fi = 0
     while (fi < files.length) {
       val reader = new VectorizedParquetRecordReader(false, 4096)
       try {
-        reader.initialize(files(fi), Cols)
+        open(reader, files(fi))
         val batch = reader.resultBatch() // allocates the column vectors
         var ri = 0
         while (reader.nextBatch()) {
@@ -623,7 +635,7 @@ final class CdfPartitionReader(p: CdfInputPartition)
           if (reader == null) {
             reader = new VectorizedParquetRecordReader(false, 4096)
             activeStreamReader = reader
-            reader.initialize(files(fi), Cols)
+            open(reader, files(fi))
             reader.resultBatch() // allocates the column vectors
             ri = 0
           }
@@ -686,7 +698,9 @@ final class CdfPartitionReader(p: CdfInputPartition)
     */
   private var activeStreamReader: VectorizedParquetRecordReader = _
 
-  private val rows: Iterator[InternalRow] = {
+  // a var so a drained reader drops its state: Spark closes readers only
+  // at task end, and a coalesced task drains several in turn
+  private var rows: Iterator[InternalRow] = {
     val before = readSide(p.beforeFiles)
     val afterFiles = p.afterFiles.sorted
 
@@ -784,12 +798,41 @@ final class CdfPartitionReader(p: CdfInputPartition)
   }
 
   private var current: InternalRow = _
-  override def next(): Boolean = { if (rows.hasNext) { current = rows.next(); true } else false }
+  override def next(): Boolean =
+    if (rows.hasNext) { current = rows.next(); true } else { rows = Iterator.empty; false }
   override def get(): InternalRow = current
   override def close(): Unit = {
     if (activeStreamReader != null) {
       activeStreamReader.close()
       activeStreamReader = null
     }
+  }
+}
+
+private[stream] object CdfPartitionReader {
+  import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+  import org.apache.spark.sql.internal.SQLConf
+
+  /** A lake data file's columns in file-schema order; also the feed's
+    * payload order.
+    */
+  val FileSchema: StructType = StructType(
+    Seq("repo", "path", "commit", "language", "content").map(StructField(_, StringType)) ++
+      Seq(StructField("size_bytes", LongType), StructField("seq", LongType),
+        StructField("deleted", BooleanType)))
+
+  /** The Hadoop conf every data-file read in this JVM shares (read-only
+    * once built): Parquet's read support projected to [[FileSchema]], and
+    * the five SQL keys Spark's path-only reader initialize sets to false.
+    */
+  lazy val ReadConf: org.apache.hadoop.conf.Configuration = {
+    val c = new org.apache.hadoop.conf.Configuration()
+    c.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, FileSchema.json)
+    Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+      SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG).foreach(e => c.setBoolean(e.key, false))
+    c
   }
 }

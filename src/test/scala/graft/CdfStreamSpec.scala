@@ -427,6 +427,10 @@ class CdfStreamSpec extends SparkSpec {
     assert(gotMoved === want(vPre, head))
     assert(!gotMoved.exists(t => t._2 == "r3"),
       "an unchanged (merely moved) key must not appear in the feed")
+    // the batch frame over the same straddling windows takes the fallback too
+    for ((from, to) <- Seq((0, head), (vPre, head)))
+      assert(rows8(rebucketed.changesBetween(spark, from, to)) === referenceDiff(rebucketed, from, to),
+        s"changesBetween($from, $to) across the rebucket")
 
     // window NOT straddling it (both endpoints post-rebucket): per-bucket diff
     val (gotPost, partsPost) = viaReader(vPre + 1, head)

@@ -385,17 +385,24 @@ class MorSpec extends SparkSpec {
     table.merge(spark, wide.toDF(cols: _*), 0L)
     table.merge(spark, Seq(("r1", "p1", "U", 1000L, "c9", "scala", "y", Option(1L)))
       .toDF(cols: _*), 1L)
-    def scanned(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.executedPlan.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-          s.relation.location.inputFiles.length.toLong
-      }.sum
+    val full = table.read(spark).queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.inputFiles.length
+    }.sum
     val feed = table.changesBetween(spark, 1, 2)
     assert(feed.select("op", "repo").as[(String, String)].collect().toSeq
       === Seq(("U", "r1")))
-    // both sides together must enumerate ≪ 2 × the full file set
-    assert(scanned(feed) < scanned(table.read(spark)),
-      s"feed scanned ${scanned(feed)} files vs full ${scanned(table.read(spark))}")
+    // the feed's partitions as planned: only r1's bucket, paired across
+    // both endpoints, and both sides together ≪ the full file set
+    val parts = feed.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        s.inputPartitions.map(_.asInstanceOf[graft.stream.CdfInputPartition])
+    }.flatten
+    assert(parts.map(_.bucket).distinct === Seq(table.bucketOf("r1", "p1")),
+      s"feed planned buckets ${parts.map(_.bucket).distinct}")
+    val feedFiles = parts.flatMap(p => p.beforeFiles ++ p.afterFiles).distinct.length
+    assert(feedFiles > 0 && feedFiles < full,
+      s"feed reads $feedFiles files vs full $full")
   }
 
   test("vacuum grace window protects a young empty snap directory (in-flight writer race)") {
