@@ -813,17 +813,18 @@ private[stream] object CdfPartitionReader {
   import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
   import org.apache.spark.sql.internal.SQLConf
 
-  /** A lake data file's columns in file-schema order; also the feed's
-    * payload order.
+  /** A lake data file's columns in file-schema order: the feed's payload
+    * columns, then the tombstone flag.
     */
-  val FileSchema: StructType = StructType(
-    Seq("repo", "path", "commit", "language", "content").map(StructField(_, StringType)) ++
-      Seq(StructField("size_bytes", LongType), StructField("seq", LongType),
-        StructField("deleted", BooleanType)))
+  val FileSchema: StructType =
+    StructType(CdfFeed.feedSchema.fields.tail :+ StructField("deleted", BooleanType))
 
   /** The Hadoop conf every data-file read in this JVM shares (read-only
     * once built): Parquet's read support projected to [[FileSchema]], and
     * the five SQL keys Spark's path-only reader initialize sets to false.
+    * Built from the JVM's Hadoop defaults, not the session's conf: on a
+    * cluster whose file system needs session settings, this is the seam
+    * that would take the executor's conf instead.
     */
   lazy val ReadConf: org.apache.hadoop.conf.Configuration = {
     val c = new org.apache.hadoop.conf.Configuration()
