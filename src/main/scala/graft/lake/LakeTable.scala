@@ -615,16 +615,23 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
   /** Drain new changes since the durable cursor: if the head has advanced
     * past the cursor's last-processed version, returns (fromV, toV, feed)
     * and a `commit()` that atomically advances the cursor — the consumer
-    * calls it AFTER its own output is durable, giving at-least-once
-    * delivery with exactly-once effect when the downstream apply is
-    * idempotent (which [[changesBetween]]'s keyed I/U/D rows make trivial:
-    * upserts/deletes by key re-apply harmlessly). A missing cursor file
-    * starts from version 0 (full history as one feed). Crash between
-    * callback and commit ⇒ the same window is re-delivered, never skipped.
-    * A FRESH consumer (cursor at 0) bootstraps even after expireSnapshots
-    * erased v0: the planner reads its window as the live state at head as
-    * I rows. A NON-fresh cursor that predates the oldest retained snapshot
-    * fails with bootstrap guidance rather than silently skipping history.
+    * calls it AFTER its own output is durable. That is at-least-once
+    * delivery, never a skipped window: a crash between the consumer's
+    * output and `commit()` re-delivers [cursor, NEW head], which is WIDER
+    * than the window already applied. A window is a diff of its two
+    * endpoints, so a key the applied window inserted and a later commit
+    * deleted yields no row in it, and stays live downstream. The effect
+    * is exactly-once only when the consumer stores the version it applied
+    * WITH its output and resumes from that, as
+    * [[graft.stream.Tailer.resyncInto]] and
+    * [[graft.stream.Mv.maintainViaCursor]] do without any cursor.
+    *
+    * A missing cursor file starts from version 0 (full history as one
+    * feed). A FRESH consumer (cursor at 0) bootstraps even after
+    * expireSnapshots erased v0: the planner reads its window as the live
+    * state at head as I rows. A NON-fresh cursor that predates the oldest
+    * retained snapshot fails with bootstrap guidance rather than silently
+    * skipping history.
     */
   def drainChanges(spark: SparkSession, cursorFile: Path,
                    updatePreimages: Boolean = false): Option[ChangeWindow] = {
@@ -901,7 +908,9 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
 
   // --- MERGE ---------------------------------------------------------------
 
-  /** One drained change window: the feed plus a cursor-advance callback. */
+  /** One drained change window: the feed plus a cursor-advance callback
+    * (at-least-once: see [[drainChanges]] for when re-delivery is safe).
+    */
   final case class ChangeWindow(fromVersion: Int, toVersion: Int,
                                 feed: DataFrame, commit: () => Unit)
 
@@ -962,11 +971,15 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
     * the batch first. An empty MOR write may leave an output directory
     * behind; no manifest references it, so [[vacuum]] reclaims it as it
     * reclaims commit losers' files.
+    *
+    * `summary` joins the committed snapshot's summary, so a consumer can
+    * record its progress in the same commit as its data.
     */
   def merge(spark: SparkSession, batch: DataFrame, batchId: Long,
             updateColumns: Option[Seq[String]], retries: Int,
             srcKeyUnique: Boolean = false,
-            acceptEqualSeq: Boolean = false): MergeStats = {
+            acceptEqualSeq: Boolean = false,
+            summary: Map[String, String] = Map.empty): MergeStats = {
     val h0 = checkedHead()
     def notApplied(h: Snapshot) = MergeStats(applied = false, h.version, 0L, 0, h.totalRows)
     if (batchId <= h0.lastBatchId) return notApplied(h0)
@@ -988,7 +1001,7 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
           "LWW-dedupe the batch first (e.g. Dedupe.lwwTyped) or pass srcKeyUnique=true " +
             "if deduped by construction")
       }
-      def summary(srcRows: Long, touched: Set[Int]) = Map("batchId" -> batchId.toString,
+      def mergeSummary(srcRows: Long, touched: Set[Int]) = summary ++ Map("batchId" -> batchId.toString,
         "srcRows" -> srcRows.toString, "touchedBuckets" -> touched.size.toString)
       def applied(srcRows: Long, touched: Set[Int])(s: Snapshot) =
         MergeStats(applied = true, s.version, srcRows, touched.size, s.totalRows)
@@ -1005,7 +1018,7 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
         if (newFiles.isEmpty) Left(notApplied(h))
         else Right(Pending(base => nextSnapshot(base, touched,
             writeManifests(newToken(), newFiles ++ loadAll(base.manifests.filter(r => touched(r.bucket)))),
-            summary(srcRows, touched), Some(batchId)),
+            mergeSummary(srcRows, touched), Some(batchId)),
           applied(srcRows, touched), fenced((_, _) =>
             if (newFiles.exists(f => !Files.exists(Paths.get(root, f.path)))) Recompute
             else Rebase)))
@@ -1022,7 +1035,7 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
           val merged = cowMerged(readBuckets(spark, h, touched), src, updateColumns, acceptEqualSeq)
           val token = newToken()
           val newRefs = writeManifests(token, writeSnapshotFiles(merged, token))
-          Right(Pending(nextSnapshot(_, touched, newRefs, summary(srcRows, touched), Some(batchId)),
+          Right(Pending(nextSnapshot(_, touched, newRefs, mergeSummary(srcRows, touched), Some(batchId)),
             applied(srcRows, touched), fenced(rewriteVerdict(touched, newRefs))))
         }
       }
@@ -1332,8 +1345,11 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
     * output under an `outBuckets` modulus, and carry every other manifest
     * by reference. The output derives from every picked row, so ANY
     * interleaved commit forces a recompute against the new head (ingest
-    * always wins over maintenance). Returns the non-empty buckets
-    * rewritten; an empty pick commits nothing.
+    * always wins over maintenance). The rewrite preserves the live state,
+    * so it carries the base's consumer progress keys
+    * ([[LakeTable.ProgressSource]], [[LakeTable.ProgressVersion]]) forward.
+    * Returns the non-empty buckets rewritten; an empty pick commits
+    * nothing.
     */
   private def rewriteBuckets(spark: SparkSession, retries: Int, pick: Snapshot => Set[Int],
                              summary: Int => Map[String, String],
@@ -1351,7 +1367,9 @@ final class LakeTable(val root: String, val numBuckets: Int = 32,
         val token = newToken()
         val newRefs = writeManifests(token, writeSnapshotFiles(live, token,
           sorted = true, maxRowsPerFile = targetFileRows, buckets = outBuckets))
-        Right(Pending(nextSnapshot(_, picked, newRefs, summary(rewritten.size), buckets = outBuckets),
+        Right(Pending(base => nextSnapshot(base, picked, newRefs, summary(rewritten.size) ++
+            base.summary.filter(e => e._1 == ProgressSource || e._1 == ProgressVersion),
+            buckets = outBuckets),
           _ => rewritten.toSet))
       }
     }
@@ -1720,10 +1738,18 @@ object LakeTable {
       result: Snapshot => A,
       onLost: (Snapshot, Snapshot) => Verdict[A] = (_: Snapshot, _: Snapshot) => Recompute)
 
+  /** Snapshot-summary keys a replication sink commits with its data: the
+    * normalised root of the table it copies, and the version of that
+    * table the commit brought it to. Layout rewrites (compactions,
+    * rebucket) carry them forward; every other commit drops them.
+    */
+  val ProgressSource = "progress.source"
+  val ProgressVersion = "progress.version"
+
   /** The version a consumer cursor names: 0 when the file is missing (a
     * fresh consumer), a curated error when it does not hold an integer.
     */
-  private[graft] def readCursor(cursorFile: Path): Int =
+  private def readCursor(cursorFile: Path): Int =
     if (!Files.exists(cursorFile)) 0
     else Files.readString(cursorFile).trim.toIntOption.getOrElse(
       throw new IllegalStateException(
@@ -1736,12 +1762,9 @@ object LakeTable {
     extends IllegalStateException(message)
 
   /** Atomically persist a consumer cursor (tmp file + ATOMIC_MOVE +
-    * REPLACE_EXISTING): a reader never observes a torn write — the ONE
-    * cursor protocol, shared by [[LakeTable.drainChanges]]' commit and
-    * [[graft.stream.Tailer.resyncInto]]'s re-seed so their crash behavior
-    * can never diverge.
+    * REPLACE_EXISTING): a reader never observes a torn write.
     */
-  private[graft] def writeCursor(cursorFile: Path, version: Int): Unit = {
+  private def writeCursor(cursorFile: Path, version: Int): Unit = {
     val tmp = cursorFile.resolveSibling(s".${cursorFile.getFileName}.tmp")
     Files.writeString(tmp, version.toString)
     Files.move(tmp, cursorFile, StandardCopyOption.ATOMIC_MOVE,

@@ -805,9 +805,9 @@ object GraftMaintTvf {
   val mvRefreshIdent: FunctionIdentifier = FunctionIdentifier("graft_mv_refresh")
   val mvRefreshInfo = new ExpressionInfo(GraftMaintTvf.getClass.getCanonicalName,
     null, "graft_mv_refresh", "graft_mv_refresh(root, cursorFile, viewDir" +
-      "[, groupCol]) - drain the table's pending changes into the " +
-      "incrementally-maintained (group, cnt, bytes) aggregate view " +
-      "(cursor-committed after the fold is durable); returns whether a " +
+      "[, groupCol]) - fold the table's changes since the view's pointer " +
+      "into the incrementally-maintained (group, cnt, bytes) aggregate view " +
+      "(cursorFile only tags the view's consumer); returns whether a " +
       "window was applied and the view's pointer", "", "", "", "", "", "",
     "built-in")
 
@@ -829,9 +829,7 @@ object GraftMaintTvf {
     }
     val applied = graft.stream.Mv.maintainViaCursor(session, root,
       java.nio.file.Paths.get(cursor), viewDir, groupCol)
-    val pointer = java.nio.file.Paths.get(viewDir, "_latest")
-    val v = if (java.nio.file.Files.exists(pointer))
-      java.nio.file.Files.readString(pointer).trim.toLong else -1L
+    val v = graft.stream.Mv.pointer(java.nio.file.Paths.get(viewDir)).getOrElse(-1L)
     GraftTvf.analyzed(Seq((applied, v)).toDF("applied", "view_batch"))
   }
 

@@ -101,61 +101,48 @@ object Mv {
       .trigger(trigger)
       .start()
 
-  /** Non-streaming maintenance: one [[graft.lake.LakeTable.drainChanges]]
-    * window (read with preimages) folded into the view, cursor committed
-    * AFTER the fold is durable. batchId = the window's toVersion — snapshot
-    * versions are monotone, so the pointer fence gives the same replay
-    * algebra as the streaming path without a Structured Streaming query
-    * (the fit for cron-style batch refresh). Returns true if a window was
-    * applied, false if already caught up. The consumer tag is the cursor
-    * file — a view is pinned to ONE cursor exactly as the streaming view
-    * is pinned to one checkpoint.
+  /** Non-streaming maintenance: the change window from the view's own
+    * pointer to the primary's head (read with preimages), folded into the
+    * view. batchId = the window's toVersion, so the pointer, which
+    * [[applyDeltas]] advances atomically with the view, IS the primary
+    * version the view holds: the one progress record, with no cursor to
+    * fall behind it. A crash before the pointer advance leaves the view
+    * at its old version, and the next run diffs the same start again.
+    * A view with no pointer (new, or deleted to rebuild it) folds the
+    * bootstrap window [0, head]: the table's full live state as I rows.
+    * Returns true if a window was applied, false if already caught up.
+    * `cursorFile` is only the view's consumer tag: a view is pinned to
+    * ONE tag exactly as the streaming view is pinned to one checkpoint.
+    * Snapshot versions are monotone, so the pointer fence gives the same
+    * replay algebra as the streaming path without a Structured Streaming
+    * query (the fit for cron-style batch refresh).
     */
   def maintainViaCursor(spark: SparkSession, primaryRoot: String,
                         cursorFile: Path, viewDir: String,
                         groupCol: String = "language",
                         retain: Int = 2): Boolean = {
     val table = graft.lake.LakeTable.open(primaryRoot)
-    // Heal a crash between applyDeltas and cursor commit FIRST. Unlike the
-    // streaming path (whose offset log re-delivers the IDENTICAL window),
-    // re-draining from a stale cursor widens the window to the new head —
-    // [from, newTo] overlaps the already-applied [from, oldTo] and the
-    // fence (which only stops batchId <= pointer) would double-apply the
-    // overlap. The view pointer is durable proof of application through
-    // that version, so advance the cursor to it before draining — but only
-    // after the consumer tag confirms this cursor owns this view.
-    val dir = Paths.get(viewDir)
-    pointer(dir).foreach { applied =>
-      checkConsumer(dir, cursorFile.toString)
-      if (applied > graft.lake.LakeTable.readCursor(cursorFile))
-        graft.lake.LakeTable.writeCursor(cursorFile, applied.toInt)
-    }
-    val window =
-      try table.drainChanges(spark, cursorFile, updatePreimages = true)
+    val applied = pointer(Paths.get(viewDir))
+    applied.foreach(_ => checkConsumer(Paths.get(viewDir), cursorFile.toString))
+    val from = applied.getOrElse(0L).toInt
+    val to = table.headVersion()
+    if (to <= from) return false
+    val feed =
+      try CdfFeed.window(spark, table, from, to, updatePreimages = true, fresh = applied.isEmpty)
       catch {
-        // the cursor's window was expired (expireSnapshots outran this
-        // view): the change feed's generic guidance ("full read + re-seed
-        // the cursor") is WRONG for an aggregate view — a keyed mirror can
-        // absorb a full-state merge, but a delta-folded aggregate cannot
-        // distinguish already-counted rows. The exact rebuild is total:
-        // drop the view and cursor; the next run's v0 window IS the full
-        // live state as I rows, so the bootstrap fold recreates the view.
+        // expireSnapshots outran this view: a keyed mirror can absorb a
+        // full-state merge, but a delta-folded aggregate cannot tell
+        // already-counted rows apart. The exact rebuild is total: with
+        // no pointer, the next run folds the full live state.
         case e: graft.lake.LakeTable.ExpiredHistoryException =>
-          throw new IllegalStateException(
-            s"mv: the view's change window was expired on the primary " +
-              s"(${e.getMessage}). An aggregate view cannot be healed " +
-              s"incrementally across an expired gap — rebuild it: delete " +
-              s"'$viewDir' and '$cursorFile', then re-run; the fresh drain " +
-              "folds the table's full live state as the bootstrap batch.", e)
+          throw new IllegalStateException(s"mv: the view's change window was " +
+            s"expired on the primary (${e.getMessage}). An aggregate view cannot be " +
+            s"healed across an expired gap — rebuild it: delete '$viewDir' and re-run; " +
+            "the fresh window folds the table's full live state.", e)
       }
-    window match {
-      case None => false
-      case Some(w) =>
-        applyDeltas(viewDir, groupCol, w.feed, batchId = w.toVersion.toLong,
-          retain, consumerTag = Some(cursorFile.toString))
-        w.commit() // crash before this re-delivers the window; fence no-ops
-        true
-    }
+    applyDeltas(viewDir, groupCol, feed, batchId = to.toLong, retain,
+      consumerTag = Some(cursorFile.toString))
+    true
   }
 
   /** The maintained view as of its last applied batch:
@@ -285,7 +272,10 @@ object Mv {
           "from the new checkpoint's bootstrap batch.")
   }
 
-  private def pointer(dir: Path): Option[Long] = {
+  /** The batch the view at `dir` last applied (for a cursor-maintained
+    * view, the primary version it holds), None before its first apply.
+    */
+  private[graft] def pointer(dir: Path): Option[Long] = {
     val f = dir.resolve("_latest")
     if (Files.exists(f)) Some(Files.readString(f).trim.toLong) else None
   }

@@ -283,71 +283,85 @@ object Tailer {
     appendLineage(spark, cfg.lineageDir, batchId, tap, rawCols)
   }
 
-  /** Cursor-based incremental sync with EXPIRED-HISTORY RECOVERY: drains
-    * the primary's change feed into the derived table like
-    * [[graft.lake.LakeTable.drainChanges]] + [[applyChanges]], but when the
-    * cursor predates the oldest retained snapshot (expireSnapshots ran past
-    * it — incremental history is gone), it RESYNCS instead of failing: the
-    * primary's full live state is applied as a FULL-SYNC merge (update
-    * matched, insert missing, `WHEN NOT MATCHED BY SOURCE`-delete the rest)
-    * and the cursor is re-seeded at the primary head. The BY SOURCE delete
-    * arm is what makes recovery exact — a key deleted inside the expired
-    * gap has no replayable D event, so a plain bootstrap feed would leave
-    * it live in the replica forever.
+  /** The arm one [[resyncInto]] call ran, named as the CLI prints it. */
+  object Resync extends Enumeration {
+    /** Diffed from the version the mirror recorded (possibly no change). */
+    val Incremental = Value("incremental")
+    /** An empty mirror with no recorded progress took the live state. */
+    val Bootstrap = Value("bootstrap")
+    /** The recorded version's history was expired: full sync. */
+    val Expired = Value("full sync (history expired)")
+    /** A mirror holding state with no recorded progress: full sync. A
+      * mirror an older build synced kept its progress in a cursor file,
+      * which nothing reads now, so it takes this arm once.
+      */
+    val Unrecorded = Value("full sync, once (no recorded progress; an old resync.cursor is ignored)")
+  }
+
+  /** Non-streaming sync of a mirror from a primary's change feed, resumed
+    * from the mirror's OWN last commit: every commit this makes records
+    * the primary root and the primary version it brought the mirror to
+    * ([[LakeTable.ProgressSource]], [[LakeTable.ProgressVersion]]) in the
+    * same snapshot as the data, so the mirror's state and its progress can
+    * never disagree — a crash before the commit leaves both where they
+    * were. The arms, by what the mirror's head records:
+    *  - this primary at v: the window [v, head] through [[applyChanges]];
+    *    an empty window commits nothing, and the next call diffs from v
+    *    again (the mirror still equals the primary at v);
+    *  - the window [v, head] was expired: FULL SYNC;
+    *  - nothing, on an empty mirror: the bootstrap window [0, head];
+    *  - nothing, on a mirror holding state (written by another path, or
+    *    by a resync that predates recorded progress): FULL SYNC — a
+    *    bootstrap feed carries no deletes, so stale keys would linger.
     *
-    * Returns true when a resync (vs an incremental drain / no-op) ran.
-    * Applies to the durable-cursor consumer path; a STREAMING follower
-    * whose checkpoint predates retention restarts with a fresh checkpoint
-    * after this resync (its offset log pins the expired version).
+    * A full sync applies the primary's live state at head as ONE
+    * synthetic change-feed batch through the normal sink, so it works on
+    * COW and MOR mirrors alike: every primary live row as a U row (an
+    * equal-seq payload mutation inside an expired gap lands because the
+    * sink accepts equal-seq source wins), and every key live in the
+    * mirror but gone from the primary as a D row carrying the mirror's
+    * own seq (the sink's tombstone bump makes it outrank the stale row).
+    * That BY-SOURCE delete arm is what makes it exact for keys deleted
+    * while the mirror was not looking.
+    *
+    * Each commit is fenced at the mirror's `lastBatchId + 1`, so two
+    * concurrent resyncs fence each other. A STREAMING follower whose
+    * checkpoint predates retention restarts with a fresh checkpoint after
+    * this resync (its offset log pins the expired version).
     */
-  def resyncInto(spark: SparkSession, primaryRoot: String, derived: LakeTable,
-                 cursorFile: java.nio.file.Path): Boolean = {
+  def resyncInto(spark: SparkSession, primaryRoot: String,
+                 derived: LakeTable): Resync.Value = {
     val primary = LakeTable.open(primaryRoot)
-    // A MISSING cursor on a mirror that already holds state is a lost
-    // cursor, not a fresh consumer: the bootstrap feed (live state as I
-    // rows — whether v0 is retained or expired) carries no deletes, so
-    // keys removed on the primary while the cursor was lost would linger
-    // in the mirror forever. Only the full-sync arm (its anti-join D pass)
-    // can purge them — take it directly.
-    val lostCursor = !java.nio.file.Files.exists(cursorFile) &&
-      derived.head().totalRows > 0
-    // Full sync as ONE synthetic change-feed batch through the normal sink
-    // ([[applyChanges]]), so it works on COW and MOR mirrors alike. Pinned
-    // at headV so the re-seeded cursor and the applied state name the same
-    // snapshot:
-    //  - every primary live row as a U row (equal-seq payload mutations
-    //    inside the expired gap land because the sink accepts equal-seq
-    //    source wins);
-    //  - every key live in the mirror but gone from the primary as a D row
-    //    carrying the mirror's own seq (the sink's tombstone bump makes it
-    //    outrank the stale row — the arm that makes recovery exact for
-    //    keys deleted inside the gap).
-    def fullSync(): Boolean = {
-      val headV = primary.headVersion()
+    val source = java.nio.file.Paths.get(primaryRoot).toAbsolutePath.normalize.toString
+    val h = derived.head()
+    val headV = primary.headVersion()
+    // a recorded version past the primary's head names another table that
+    // once lived at this root: there is nothing to diff from
+    val recorded = h.summary.get(LakeTable.ProgressVersion).map(_.toInt)
+      .filter(v => v <= headV && h.summary.get(LakeTable.ProgressSource).contains(source))
+    def sync(feed: DataFrame): Unit =
+      applyChanges(derived, feed, batchId = h.lastBatchId + 1, progress = Map(
+        LakeTable.ProgressSource -> source, LakeTable.ProgressVersion -> headV.toString))
+    def fullSync(arm: Resync.Value): Resync.Value = {
       val state = primary.readAt(spark, headV)
-        .select("repo", "path", "commit", "language", "content", "size_bytes", "seq")
-      val upserts = state.withColumn("op", lit("U"))
       val gone = derived.read(spark)
-        .select("repo", "path", "seq")
         .join(state.select("repo", "path"), Seq("repo", "path"), "left_anti")
-        .withColumn("op", lit("D"))
-        .withColumn("commit", lit(null).cast("string"))
-        .withColumn("language", lit(null).cast("string"))
-        .withColumn("content", lit(null).cast("string"))
-        .withColumn("size_bytes", lit(null).cast("long"))
-      applyChanges(derived, upserts.unionByName(gone),
-        batchId = derived.head().lastBatchId + 1)
-      LakeTable.writeCursor(cursorFile, headV)
-      true
+        .select(col("repo"), col("path"), col("seq"), lit("D").as("op"))
+      sync(state.withColumn("op", lit("U")).unionByName(gone, allowMissingColumns = true))
+      arm
     }
-    if (lostCursor) fullSync()
-    else try {
-      primary.drainChanges(spark, cursorFile).foreach { w =>
-        applyChanges(derived, w.feed, batchId = derived.head().lastBatchId + 1)
-        w.commit()
-      }
-      false
-    } catch { case _: LakeTable.ExpiredHistoryException => fullSync() }
+    recorded match {
+      case Some(v) =>
+        try {
+          if (v < headV)
+            sync(CdfFeed.window(spark, primary, v, headV, updatePreimages = false, fresh = false))
+          Resync.Incremental
+        } catch { case _: LakeTable.ExpiredHistoryException => fullSync(Resync.Expired) }
+      case None if h.totalRows == 0 =>
+        sync(CdfFeed.window(spark, primary, 0, headV, updatePreimages = false, fresh = true))
+        Resync.Bootstrap
+      case None => fullSync(Resync.Unrecorded)
+    }
   }
 
   /** Canonical lineage reader: the lineage dir is APPENDED at-least-once
@@ -508,9 +522,13 @@ object Tailer {
     * key carried seq' strictly greater than the delete's real seq, which
     * itself exceeded the before-image seq — so seq' >= before+2 always
     * outranks the bumped tombstone, and no other writer feeds the mirror.
+    *
+    * `progress` joins the commit's snapshot summary ([[resyncInto]]
+    * records where the mirror stands with the data it commits).
     */
   def applyChanges(derived: LakeTable, feed: DataFrame, batchId: Long,
-                   lineageDir: Option[String] = None): Unit = {
+                   lineageDir: Option[String] = None,
+                   progress: Map[String, String] = Map.empty): Unit = {
     // same per-partition lineage contract as the WAL tailer: offsets are
     // the feed's seq range, bytes the changed content. The tap sits under
     // the merge's own read of the feed (the expensive part of a
@@ -530,7 +548,7 @@ object Tailer {
     // latest-write file-path tie-break — monotone write tokens.)
     // An empty feed commits nothing (the merge's own output says so).
     derived.merge(feed.sparkSession, batch, batchId, updateColumns = None,
-      retries = 3, srcKeyUnique = true, acceptEqualSeq = true)
+      retries = 3, srcKeyUnique = true, acceptEqualSeq = true, summary = progress)
     lineageDir.foreach(appendLineage(feed.sparkSession, _, batchId, tap, feed))
   }
 

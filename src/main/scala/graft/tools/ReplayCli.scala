@@ -110,9 +110,9 @@ object ReplayCli {
       val after = table.head()
       val tombMsg = if (gc) f"dropped $tombs%,d tombstones"
                     else f"retained $tombs%,d tombstones"
-      println(f"[compact] v${before.version}→v${after.version} buckets $buckets " +
-        f"rows ${before.totalRows}%,d→${after.totalRows}%,d " +
-        f"($tombMsg) files ${before.totalFiles}→${after.totalFiles}")
+      println(f"[compact] v${before.version}->v${after.version} buckets $buckets " +
+        f"rows ${before.totalRows}%,d->${after.totalRows}%,d " +
+        f"($tombMsg) files ${before.totalFiles}->${after.totalFiles}")
       spark.stop()
 
     // rewrite the table under a new key-hash modulus (maintenance op for
@@ -134,9 +134,9 @@ object ReplayCli {
       val before = t0.head()
       val t1 = t0.rebucket(spark, buckets, targetFileRows = targetRows)
       val after = t1.head()
-      println(f"[rebucket] v${before.version}→v${after.version} " +
-        f"buckets ${t0.numBuckets}→${t1.numBuckets} rows ${after.totalRows}%,d " +
-        f"files ${before.totalFiles}→${after.totalFiles}")
+      println(f"[rebucket] v${before.version}->v${after.version} " +
+        f"buckets ${t0.numBuckets}->${t1.numBuckets} rows ${after.totalRows}%,d " +
+        f"files ${before.totalFiles}->${after.totalFiles}")
       spark.stop()
 
     // continuously-consumable change feed: drain the graft-cdf stream into
@@ -183,18 +183,17 @@ object ReplayCli {
       v.show(20, truncate = false)
       spark.stop()
 
-    // cursor-based sync with expired-history recovery: incremental drain
-    // when the feed window is retained, exact full-sync resync (BY SOURCE
-    // delete arm) + cursor re-seed when retention erased it
+    // non-streaming sync that resumes from the version the derived table
+    // recorded in its own last commit: incremental when that window is
+    // retained, exact full sync (BY SOURCE delete arm) when retention
+    // erased it or when the derived table holds state but records none
     case "resync" :: workDir :: derivedDir :: Nil =>
       val spark = Sessions.local(sys.env.getOrElse("GRAFT_CORES", "8").toInt, "graft-resync")
       val derived = LakeTable(s"$derivedDir/table",
         LakeTable.open(s"$workDir/table").numBuckets)
-      val resynced = Tailer.resyncInto(spark, s"$workDir/table", derived,
-        java.nio.file.Paths.get(derivedDir, "resync.cursor"))
+      val arm = Tailer.resyncInto(spark, s"$workDir/table", derived)
       val rows = derived.read(spark).count()
-      println(f"[resync] derived $derivedDir/table rows=$rows%,d " +
-        (if (resynced) "FULL-RESYNC (history expired)" else "incremental"))
+      println(f"[resync] derived $derivedDir/table rows=$rows%,d $arm")
       spark.stop()
 
     case "vacuum" :: workDir :: rest =>
@@ -229,7 +228,7 @@ object ReplayCli {
         .drainChanges(spark, java.nio.file.Paths.get(workDir, "cdf.cursor")) match {
         case Some(w) =>
           val feed = w.feed.cache()
-          println(s"[drain] v${w.fromVersion}→v${w.toVersion} rows=${feed.count()}")
+          println(s"[drain] v${w.fromVersion}->v${w.toVersion} rows=${feed.count()}")
           feed.orderBy(desc("seq")).show(5, truncate = 40)
           w.commit()
         case None => println("[drain] up to date")
@@ -243,7 +242,7 @@ object ReplayCli {
         .changesBetween(spark, from.toInt, to.toInt).cache()
       val byOp = feed.groupBy("op").count().collect()
         .map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted.mkString(" ")
-      println(s"[changes] v$from→v$to rows=${feed.count()} $byOp")
+      println(s"[changes] v$from->v$to rows=${feed.count()} $byOp")
       feed.orderBy(desc("seq")).show(10, truncate = 40)
       spark.stop()
 

@@ -627,14 +627,15 @@ class CdfStreamSpec extends SparkSpec {
     val base = tmpDir(s"cdf-resync-$mode")
     val primary = LakeTable(s"$base/p", 4)
     val derived = LakeTable(s"$base/d", 4, mode)
-    val cursor = java.nio.file.Paths.get(base, "cursor")
     def mk(r: String, s: Long, op: String = "U") =
       (r, "p", op, s, s"c$s", "scala", if (op == "D") null else s"v$s", Option(s))
 
     primary.merge(spark, Seq(mk("r1", 1), mk("r2", 2), mk("r3", 3)).toDF(cols: _*), 0L)
-    // first sync: plain incremental drain (history intact)
-    assert(!Tailer.resyncInto(spark, s"$base/p", derived, cursor))
-    assert(state(derived) === state(primary), "incremental sync parity")
+    // first sync: the bootstrap window (history intact)
+    assert(Tailer.resyncInto(spark, s"$base/p", derived) === Tailer.Resync.Bootstrap)
+    assert(state(derived) === state(primary), "bootstrap parity")
+    val recorded = derived.head().summary(LakeTable.ProgressVersion).toInt
+    assert(recorded === primary.headVersion(), "the mirror's commit records the synced version")
 
     // the gap the follower will MISS: an update, a DELETE, an insert, AND a
     // SQL-MERGE payload mutation that leaves seq unassigned (r3 keeps seq 3
@@ -650,22 +651,99 @@ class CdfStreamSpec extends SparkSpec {
     primary.expireSnapshots(keepLast = 1)
     primary.vacuum(olderThanMs = 0)
 
-    // the plain drain path fails with bootstrap guidance…
+    // the incremental window from the recorded version is gone…
     val e = intercept[IllegalStateException](
-      primary.drainChanges(spark, cursor).foreach(_.feed.count()))
+      primary.changesBetween(spark, recorded, primary.headVersion()))
     assert(e.getMessage.contains("expired"), e.getMessage)
     // …and resyncInto recovers EXACTLY: r2's gap deletion must not linger,
     // r3's equal-seq mutation must land
-    assert(Tailer.resyncInto(spark, s"$base/p", derived, cursor))
+    assert(Tailer.resyncInto(spark, s"$base/p", derived) === Tailer.Resync.Expired)
     assert(state(derived) === state(primary), "post-resync parity")
     assert(!state(derived).exists(_._1 == "r2"), "gap-deleted key must be gone")
     assert(state(derived).exists(r => r._1 == "r3" && r._4 == "mutated-in-gap"),
       s"equal-seq gap mutation must replicate: ${state(derived)}")
 
-    // and the re-seeded cursor resumes incremental syncs
+    // and the full sync's recorded version resumes incremental syncs
     primary.merge(spark, Seq(mk("r5", 20)).toDF(cols: _*), 2L)
-    assert(!Tailer.resyncInto(spark, s"$base/p", derived, cursor))
+    assert(Tailer.resyncInto(spark, s"$base/p", derived) === Tailer.Resync.Incremental)
     assert(state(derived) === state(primary), "post-resync incremental parity")
+  }
+
+  for (mode <- Seq(LakeTable.Cow, LakeTable.Mor))
+  test(s"resyncInto after a crash that applied a window without its progress purges a later delete ($mode mirror)") {
+    // A build that kept the mirror's progress in a cursor written AFTER the
+    // mirror commit could crash between the two. The next run re-drained
+    // the WIDER window [cursor, new head]: a key inserted inside the
+    // applied window and deleted after it has no row there, so it stayed
+    // live in the mirror forever. That crash leaves a mirror commit which
+    // records no progress — reproduced here by applying the window
+    // through the sink directly.
+    val base = tmpDir(s"cdf-resync-crash-$mode")
+    val primary = LakeTable(s"$base/p", 4)
+    val derived = LakeTable(s"$base/d", 4, mode)
+    def mk(r: String, s: Long, op: String = "U") =
+      (r, "p", op, s, s"c$s", "scala", if (op == "D") null else s"v$s", Option(s))
+    primary.merge(spark, Seq(mk("r1", 1)).toDF(cols: _*), 0L)
+    assert(Tailer.resyncInto(spark, s"$base/p", derived) === Tailer.Resync.Bootstrap)
+    primary.merge(spark, Seq(mk("rX", 2)).toDF(cols: _*), 1L)
+    val v1 = derived.head().summary(LakeTable.ProgressVersion).toInt
+    Tailer.applyChanges(derived, primary.changesBetween(spark, v1, primary.headVersion()),
+      batchId = derived.head().lastBatchId + 1)
+    assert(state(derived).exists(_._1 == "rX"), "the crashed run's window landed")
+    primary.merge(spark, Seq(mk("rX", 3, "D")).toDF(cols: _*), 2L)
+
+    assert(Tailer.resyncInto(spark, s"$base/p", derived) === Tailer.Resync.Unrecorded)
+    assert(state(derived) === state(primary), "post-crash parity")
+    assert(!state(derived).exists(_._1 == "rX"), "the key deleted after the crash must go")
+  }
+
+  test("resyncInto rebuilds a deleted and re-created mirror to parity") {
+    val base = tmpDir("cdf-resync-recreated")
+    val primary = LakeTable(s"$base/p", 4)
+    def mk(r: String, s: Long) = (r, "p", "U", s, s"c$s", "scala", s"v$s", Option(s))
+    primary.merge(spark, Seq(mk("r1", 1), mk("r2", 2)).toDF(cols: _*), 0L)
+    assert(Tailer.resyncInto(spark, s"$base/p", LakeTable(s"$base/d", 4)) === Tailer.Resync.Bootstrap)
+    primary.merge(spark, Seq(mk("r3", 3)).toDF(cols: _*), 1L)
+
+    // the mirror goes and comes back empty: its progress went with it
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get(s"$base/d")).iterator().asScala
+      .toSeq.reverse.foreach(java.nio.file.Files.delete(_))
+    val derived = LakeTable(s"$base/d", 4)
+    assert(Tailer.resyncInto(spark, s"$base/p", derived) === Tailer.Resync.Bootstrap)
+    assert(state(derived) === state(primary), "re-created mirror parity")
+    assert(state(derived).map(_._1) === Set("r1", "r2", "r3"))
+  }
+
+  test("the mirror's progress rides its own compactions and goes with any other write") {
+    val base = tmpDir("cdf-resync-progress")
+    val primary = LakeTable(s"$base/p", 4)
+    val derived = LakeTable(s"$base/d", 4, LakeTable.Mor)
+    def mk(r: String, s: Long) = (r, "p", "U", s, s"c$s", "scala", s"v$s", Option(s))
+    def progress = derived.head().summary.keySet
+      .intersect(Set(LakeTable.ProgressSource, LakeTable.ProgressVersion))
+    primary.merge(spark, Seq(mk("r1", 1), mk("r2", 2)).toDF(cols: _*), 0L)
+    assert(Tailer.resyncInto(spark, s"$base/p", derived) === Tailer.Resync.Bootstrap)
+    assert(progress.size === 2)
+
+    // live-state-preserving rewrites of the mirror keep where it stands
+    derived.compactBuckets(spark, maxFilesPerBucket = 0)
+    derived.compact(spark)
+    assert(progress.size === 2, "compaction carries the progress keys")
+    primary.merge(spark, Seq(mk("r3", 3)).toDF(cols: _*), 1L)
+    assert(Tailer.resyncInto(spark, s"$base/p", derived) === Tailer.Resync.Incremental)
+    assert(state(derived) === state(primary))
+    // an empty window commits nothing and is diffed again next time
+    val v = derived.head().version
+    assert(Tailer.resyncInto(spark, s"$base/p", derived) === Tailer.Resync.Incremental)
+    assert(derived.head().version === v, "an up-to-date mirror commits nothing")
+
+    // any other write to the mirror leaves it with no recorded progress,
+    // and the next resync full-syncs it back to the primary
+    derived.merge(spark, Seq(mk("stray", 9)).toDF(cols: _*), derived.head().lastBatchId + 1)
+    assert(progress.isEmpty, "a direct merge drops the progress keys")
+    assert(Tailer.resyncInto(spark, s"$base/p", derived) === Tailer.Resync.Unrecorded)
+    assert(state(derived) === state(primary), "the stray row is purged")
   }
 
   test("an existing checkpoint's offset wins over a raised startVersion (no skipped window)") {
@@ -697,32 +775,34 @@ class CdfStreamSpec extends SparkSpec {
     assert(!state(derived).exists(_._1 == "r1"), "the delete inside the window must land")
   }
 
-  test("resyncInto treats a LOST cursor on a stateful mirror as expired (purges stale keys)") {
-    val base = tmpDir("cdf-lost-cursor")
+  test("resyncInto full-syncs a stateful mirror with no recorded progress (purges stale keys)") {
+    val base = tmpDir("cdf-unrecorded-mirror")
     val primary = LakeTable(s"$base/p", 4)
     val derived = LakeTable(s"$base/d", 4)
-    val cursor = java.nio.file.Paths.get(base, "cursor")
     def mk(r: String, s: Long, op: String = "U") =
       (r, "p", op, s, s"c$s", "scala", if (op == "D") null else s"v$s", Option(s))
 
     primary.merge(spark, Seq(mk("r1", 1), mk("r2", 2)).toDF(cols: _*), 0L)
-    assert(!Tailer.resyncInto(spark, s"$base/p", derived, cursor))
+    // a mirror first filled by the streaming follower, whose progress
+    // lives in its checkpoint: its commits record none
+    Tailer.followInto(spark, s"$base/p", derived, s"$base/ckpt")
     assert(state(derived) === state(primary))
+    assert(!derived.head().summary.contains(LakeTable.ProgressVersion),
+      "streaming mirror commits carry no progress keys")
 
-    // the cursor is lost; meanwhile the primary deletes r2 and adds r3.
-    // History stays RETAINED — so the bootstrap window (live state as I
-    // rows) would apply cleanly but could never purge r2 from the mirror;
-    // the lost-cursor guard must take the full-sync arm instead.
-    java.nio.file.Files.delete(cursor)
+    // meanwhile the primary deletes r2 and adds r3. History stays
+    // RETAINED — so a bootstrap window (live state as I rows) would apply
+    // cleanly but could never purge r2 from the mirror; the full-sync arm
+    // must run instead.
     primary.merge(spark, Seq(mk("r2", 10, "D"), mk("r3", 11)).toDF(cols: _*), 1L)
-    assert(Tailer.resyncInto(spark, s"$base/p", derived, cursor),
-      "lost cursor on a stateful mirror must full-sync")
+    assert(Tailer.resyncInto(spark, s"$base/p", derived) === Tailer.Resync.Unrecorded,
+      "a stateful mirror with no recorded progress must full-sync")
     assert(state(derived) === state(primary), "post-resync parity")
     assert(!state(derived).exists(_._1 == "r2"), "stale key must be purged")
 
-    // and the re-seeded cursor resumes incrementally
+    // and the full sync's recorded version resumes incrementally
     primary.merge(spark, Seq(mk("r4", 20)).toDF(cols: _*), 2L)
-    assert(!Tailer.resyncInto(spark, s"$base/p", derived, cursor))
+    assert(Tailer.resyncInto(spark, s"$base/p", derived) === Tailer.Resync.Incremental)
     assert(state(derived) === state(primary))
   }
 

@@ -180,6 +180,11 @@ class LakeModelSpec extends SparkSpec {
       === Set(("U", "r1"), ("I", "r3")))
     w2.commit()
     assert(table.drainChanges(spark, cursor).isEmpty)
+
+    // a cursor that does not hold a version fails with the curated error
+    java.nio.file.Files.writeString(cursor, "not-a-version")
+    val e = intercept[IllegalStateException](table.drainChanges(spark, cursor))
+    assert(e.getMessage.contains(s"cursor file $cursor is corrupt"), e.getMessage)
   }
 
   test("COW merge rejects duplicate source keys (cardinality violation); MOR accepts") {

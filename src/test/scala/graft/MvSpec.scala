@@ -25,6 +25,11 @@ class MvSpec extends SparkSpec {
         sum(coalesce(col("size_bytes"), lit(0L))).as("bytes"))
       .as[(String, Long, Long)].collect().toSet
 
+  private def rm(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p))
+      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+
   private def view(viewDir: String): Set[(String, Long, Long)] =
     Mv.read(spark, viewDir).select("language", "cnt", "bytes")
       .as[(String, Long, Long)].collect().toSet
@@ -140,21 +145,19 @@ class MvSpec extends SparkSpec {
     assert(view(viewDir) === recompute(primary, "language"), "bootstrap window")
     assert(!Mv.maintainViaCursor(spark, s"$base/t", cursor, viewDir), "caught up")
 
-    // crash between applyDeltas and cursor commit: simulate by re-draining
-    // the SAME window manually — the pointer fence must no-op it
+    // a run that folded the window [1, 2] and was killed right after its
+    // pointer advance: the pointer is the only progress record it leaves
     primary.merge(spark, Seq(mk("r1", "a", 10, "java"), mk("r3", "c", 11, "rust")).toDF(cols: _*), 1L)
-    val w = primary.drainChanges(spark, cursor, updatePreimages = true).get
-    Mv.applyDeltas(viewDir, "language", w.feed, batchId = w.toVersion.toLong,
-      consumerTag = Some(cursor.toString))
-    // no w.commit() — the crash. A NEW commit lands BEFORE the retry, so a
-    // naive re-drain from the stale cursor would widen the window to
-    // [from, newHead] and double-apply the already-folded overlap; the
-    // pointer-heal must seed the retry at the applied version instead
+    Mv.applyDeltas(viewDir, "language", primary.changesBetween(spark, 1, 2, updatePreimages = true),
+      batchId = 2L, consumerTag = Some(cursor.toString))
+    // a NEW commit lands BEFORE the retry: the retry must diff from the
+    // pointer, never re-fold the already-folded [1, 2]
     primary.merge(spark, Seq(mk("r2", "b", 20, "java", "D")).toDF(cols: _*), 2L)
     assert(Mv.maintainViaCursor(spark, s"$base/t", cursor, viewDir),
       "retry after crash still advances")
     assert(view(viewDir) === recompute(primary, "language"),
       "crash + concurrent commit must not double-apply the overlap")
+    assert(!java.nio.file.Files.exists(cursor), "the cursor path is only a tag")
 
     // and the cursor view rejects a different cursor (same foot-gun as a
     // fresh checkpoint)
@@ -164,22 +167,6 @@ class MvSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("checkpoint") || e.getMessage.contains("cursor"),
       e.getMessage)
-  }
-
-  test("a corrupt cursor beside an applied view fails with the curated cursor error") {
-    val base = tmpDir("mv-corrupt-cursor")
-    val primary = LakeTable(s"$base/t", 4)
-    val cursor = java.nio.file.Paths.get(s"$base/cursor")
-    val viewDir = s"$base/view"
-    primary.merge(spark,
-      Seq(("r1", "a", "U", 1L, "c1", "scala", "v1", Option(1L))).toDF(cols: _*), 0L)
-    assert(Mv.maintainViaCursor(spark, s"$base/t", cursor, viewDir))
-    // the view pointer exists, so the heal step parses the cursor first
-    java.nio.file.Files.writeString(cursor, "not-a-version")
-    val e = intercept[IllegalStateException] {
-      Mv.maintainViaCursor(spark, s"$base/t", cursor, viewDir)
-    }
-    assert(e.getMessage.contains(s"cursor file $cursor is corrupt"), e.getMessage)
   }
 
   test("property: view == recompute under randomized keyed U/D feeds with group moves (seeded)") {
@@ -276,31 +263,46 @@ class MvSpec extends SparkSpec {
     primary.merge(spark, Seq(mk("r2", "b", 20, "java", "D")).toDF(cols: _*), 2L)
     primary.expireSnapshots(keepLast = 1)
 
+    val pointer = java.nio.file.Paths.get(viewDir, "_latest")
+    val before = java.nio.file.Files.readString(pointer)
     val e = intercept[IllegalStateException] {
       Mv.maintainViaCursor(spark, s"$base/t", cursor, viewDir)
     }
     assert(e.getMessage.contains("rebuild"), e.getMessage)
-    assert(e.getMessage.contains(viewDir) && e.getMessage.contains("cursor"),
+    assert(e.getMessage.contains(s"delete '$viewDir'"),
       s"guidance must name what to delete: ${e.getMessage}")
-    // the failed attempt must not have moved anything: cursor and view
-    // pointer are exactly where they were
-    assert(java.nio.file.Files.readString(cursor).trim.toLong === 1L)
+    // the failed attempt must not have moved anything: the view pointer
+    // is exactly where it was
+    assert(java.nio.file.Files.readString(pointer) === before)
     assert(Mv.read(spark, viewDir).count() > 0)
 
-    // follow the guidance: drop view + cursor; the fresh bootstrap window
-    // (full live state as I rows) rebuilds the aggregate exactly
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-    rm(java.nio.file.Paths.get(viewDir)); rm(cursor)
+    // follow the guidance: drop the view (the cursor path stays its tag);
+    // the fresh bootstrap window (full live state as I rows) rebuilds the
+    // aggregate exactly
+    rm(java.nio.file.Paths.get(viewDir))
     assert(Mv.maintainViaCursor(spark, s"$base/t", cursor, viewDir),
       "rebuild drain applies")
     assert(view(viewDir) === recompute(primary, "language"),
       "rebuilt view == full recompute")
     assert(!Mv.maintainViaCursor(spark, s"$base/t", cursor, viewDir), "caught up")
+  }
+
+  test("a cursor view deleted while its cursor path is kept rebuilds to a full recompute") {
+    val base = tmpDir("mv-view-deleted")
+    val primary = LakeTable(s"$base/t", 4)
+    val cursor = java.nio.file.Paths.get(s"$base/cursor")
+    val viewDir = s"$base/view"
+    def mk(r: String, p: String, s: Long, lang: String) =
+      (r, p, "U", s, s"c$s", lang, s"v$s", Option(s))
+    primary.merge(spark, Seq(mk("r1", "a", 1, "scala"), mk("r2", "b", 2, "java")).toDF(cols: _*), 0L)
+    assert(Mv.maintainViaCursor(spark, s"$base/t", cursor, viewDir))
+    primary.merge(spark, Seq(mk("r3", "c", 3, "scala")).toDF(cols: _*), 1L)
+
+    rm(java.nio.file.Paths.get(viewDir))
+    assert(Mv.maintainViaCursor(spark, s"$base/t", cursor, viewDir))
+    assert(view(viewDir) === recompute(primary, "language"),
+      "a view with no pointer folds the full live state, whatever the cursor path holds")
+    assert(view(viewDir).map(r => r._1 -> r._2) === Set("scala" -> 2L, "java" -> 1L))
   }
 
   test("continuous maintenance converges while the primary keeps committing") {
